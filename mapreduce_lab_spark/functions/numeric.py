@@ -13,6 +13,15 @@ parquet), aggregate the exact integers, and only convert back to
 double at the very end — a division of identical integers, hence an
 identical double, no rounding step at all.
 
+Per-row paths never call ``F.round`` to get those units: Spark
+evaluates ``round`` on a DOUBLE as ``BigDecimal.valueOf(x).setScale(0,
+HALF_UP)``, one BigDecimal (and its decimal string) per row, and that
+object churn bounded the map side of every fixed-point aggregate.
+``to_units`` gets the same integers from ``rint`` (one machine
+instruction) plus a fix-up for exact ties; its docstring has the
+argument. Every per-row double → integer rounding in the package goes
+through it, and ``tests/test_plan_hygiene.py`` keeps it that way.
+
 Ratios (averages, shares) use ``floor(a / b)`` on exact integers at a
 fixed output scale: both engines perform the same exact-integer
 double division and the same binary floor, so results are
@@ -44,9 +53,30 @@ from pyspark.sql import functions as F
 
 
 def to_units(col: Column | str, scale: int) -> Column:
-    """Per-row conversion of fixed-decimal doubles to exact integer units."""
+    """Per-row conversion of fixed-decimal doubles to exact integer units.
+
+    The result is ``round(col * scale)`` half away from zero (HALF_UP),
+    as a long, without ``F.round``'s per-row BigDecimal. With
+    ``x = col * scale`` and ``r = rint(x)`` (nearest integer, ties to
+    even), ``x - r`` is exact in binary floating point, so
+    ``|x - r| == 0.5`` holds exactly on the ties and nowhere else;
+    there ``x + signum(x) * 0.5`` is the away-from-zero integer, also
+    exact (ties only exist below 2^52, where every k + 1 is
+    representable). This equals Spark's ``round``: that rounds the
+    shortest decimal string of ``x``, which can only read k.5 when
+    ``x`` is exactly k.5. It also equals DuckDB's ``round`` (C
+    ``round()`` on the binary value), so ``oracle_units`` stays the
+    twin. The final cast is unchanged: NULL stays NULL, and NaN, ±inf
+    and out-of-range values raise ANSI ``CAST_OVERFLOW`` as before.
+    """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * F.lit(scale)).cast("long")
+    x = c * F.lit(scale)
+    r = F.rint(x)
+    return (
+        F.when(F.abs(x - r) == 0.5, x + F.signum(x) * 0.5)
+        .otherwise(r)
+        .cast("long")
+    )
 
 
 def exact_sum(col: Column | str, scale: int) -> Column:

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.hashing import hex8_int, oracle_hex8_int
-from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio
+from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio, to_units
 from mapreduce_lab_spark.functions.text import tokenize
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
@@ -288,7 +288,7 @@ def q_embedding_centroids_by_label(spark: SparkSession, sf_dir: str) -> DataFram
     ).select(
         "label",
         F.col("dim").cast("long").alias("dim"),
-        F.round(F.col("val").cast("double") * F.lit(EMB_UNIT_SCALE)).cast("long").alias("vu"),
+        to_units(F.col("val").cast("double"), EMB_UNIT_SCALE).alias("vu"),
     )
     return exploded.groupBy("label", "dim").agg(
         F.count("*").alias("n_vectors"),

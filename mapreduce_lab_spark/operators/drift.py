@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio
+from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio, to_units
 from mapreduce_lab_spark.operators.ngrams import _ORACLE_TOKENS
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
@@ -182,9 +182,7 @@ def label_centroid_drift(embs: DataFrame) -> DataFrame:
         F.posexplode(
             F.transform(
                 "embedding",
-                lambda x: F.round(
-                    x.cast("double") * F.lit(CENTROID_UNIT_SCALE)
-                ).cast("long"),
+                lambda x: to_units(x.cast("double"), CENTROID_UNIT_SCALE),
             )
         ).alias("j", "xu"),
     )

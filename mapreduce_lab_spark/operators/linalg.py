@@ -27,9 +27,10 @@ clustering.py) with the training-side statistics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_lab_spark.functions.numeric import to_units
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
@@ -49,9 +50,8 @@ def embedding_covariance(embs: DataFrame) -> DataFrame:
     groups). Both shuffles carry only (i, j, int64 partial): at 100 TB
     the moment shuffle is d(d+1)/2 rows per map task, never vectors.
     """
-    scale = F.lit(COV_UNIT_SCALE)
     units = F.transform(
-        F.col("embedding"), lambda x: F.round(x.cast("double") * scale).cast("long")
+        F.col("embedding"), lambda x: to_units(x.cast("double"), COV_UNIT_SCALE)
     )
 
     # Self-contained closure (imports inside, no module references) so
@@ -151,9 +151,8 @@ def embedding_correlation(embs: DataFrame) -> DataFrame:
     Gramian pass, d(d+1)/2 integer groups, diagonal joined back
     broadcast. Nothing new moves.
     """
-    scale = F.lit(COV_UNIT_SCALE)
     units = F.transform(
-        F.col("embedding"), lambda x: F.round(x.cast("double") * scale).cast("long")
+        F.col("embedding"), lambda x: to_units(x.cast("double"), COV_UNIT_SCALE)
     )
 
     def gram_partials(batches):
@@ -247,11 +246,9 @@ PROJ_OUT_DIMS = 8
 _HEX_LOW = "('0','1','2','3','4','5','6','7')"
 
 
-def _sign_case_spark(k: int) -> str:
-    return (
-        f"(CASE WHEN substring(md5(concat('rp:{k}:', CAST(j AS STRING))), 1, 1)"
-        f" IN {_HEX_LOW} THEN 1 ELSE -1 END)"
-    )
+def _sign(k: int, j: Column) -> Column:
+    digit = F.substring(F.md5(F.concat(F.lit(f"rp:{k}:"), j.cast("string"))), 1, 1)
+    return F.when(digit.isin(*"01234567"), 1).otherwise(-1)
 
 
 def signed_projection(embs: DataFrame, out_dims: int = PROJ_OUT_DIMS) -> DataFrame:
@@ -279,11 +276,12 @@ def signed_projection(embs: DataFrame, out_dims: int = PROJ_OUT_DIMS) -> DataFra
     """
     cols = [F.col("vec_id"), F.col("label")]
     for k in range(out_dims):
-        units = F.expr(
-            f"aggregate(sequence(1, size(embedding)), CAST(0 AS BIGINT),"
-            f" (acc, j) -> acc"
-            f" + CAST(round(CAST(element_at(embedding, j) AS DOUBLE)"
-            f" * {COV_UNIT_SCALE}) AS BIGINT) * {_sign_case_spark(k)})"
+        units = F.aggregate(
+            F.sequence(F.lit(1), F.size("embedding")),
+            F.lit(0).cast("long"),
+            lambda acc, j: acc
+            + to_units(F.element_at("embedding", j).cast("double"), COV_UNIT_SCALE)
+            * _sign(k, j),
         )
         cols.append((units.cast("double") / F.lit(COV_UNIT_SCALE)).alias(f"p{k}"))
     return embs.select(*cols)
@@ -336,7 +334,7 @@ def revenue_trend_by_segment(orders: DataFrame, customer: DataFrame) -> DataFram
     rows from any input size, no second shuffle.
     """
     x = F.datediff(F.col("o_orderdate").cast("date"), F.lit(TREND_EPOCH).cast("date"))
-    y = F.round(F.col("o_totalprice") * 100).cast("long")
+    y = to_units("o_totalprice", 100)
     joined = orders.join(
         F.broadcast(customer.select("c_custkey", "c_mktsegment")),
         orders.o_custkey == F.col("c_custkey"),

@@ -40,6 +40,7 @@ from mapreduce_lab_spark.functions.numeric import (
     exact_ratio,
     oracle_exact_ratio,
     oracle_exact_sum,
+    to_units,
 )
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import load_table
@@ -174,9 +175,7 @@ def incremental_daily_revenue(orders: DataFrame) -> DataFrame:
         return df.groupBy(
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
         ).agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "rev_units"
-            ),
+            F.sum(to_units("o_totalprice", 100)).alias("rev_units"),
             F.count("*").alias("n_orders"),
         )
 
@@ -317,8 +316,8 @@ def ivm_join_revenue(
     o = orders.select("o_orderkey", "o_orderpriority", "o_orderdate")
     li = lineitem.select(
         "l_orderkey", "l_shipdate",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
-        .cast("long").alias("rev_units"),
+        to_units(F.col("l_extendedprice") * (1 - F.col("l_discount")), 10000)
+        .alias("rev_units"),
     )
     o_base = o.where(F.col("o_orderdate") < F.lit(o_split))
     o_delta = o.where(F.col("o_orderdate") >= F.lit(o_split))
@@ -656,7 +655,7 @@ def distributed_exact_quantiles(lineitem: DataFrame) -> DataFrame:
     conditional-sum aggregation pass verifying every quantile's rank
     position against the full table.
     """
-    pu = F.round(F.col("l_extendedprice") * 100).cast("long")
+    pu = to_units("l_extendedprice", 100)
     # One materialization of the 8-byte projection (round-13, guide
     # §5): the refinement levels and the verification pass are 5
     # sequential full scans by construction; localCheckpoint makes
@@ -796,7 +795,7 @@ def grouped_exact_median(orders: DataFrame) -> DataFrame:
     """(priority, k, value, n_le): the exact k-th smallest
     o_totalprice within each priority, k = ceil(n_g/2), with the
     distributed rank-verification count per group."""
-    pu = F.round(F.col("o_totalprice") * 100).cast("long")
+    pu = to_units("o_totalprice", 100)
     # same one-materialization discipline as distributed_exact_quantiles
     src = orders.select(
         F.col("o_orderpriority").alias("g"), pu.alias("pu")

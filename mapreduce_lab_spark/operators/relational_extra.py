@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_lab_spark.functions.numeric import to_units
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import load_table
 
@@ -95,9 +96,7 @@ def q_range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count("*").alias("n_parts"),
-            (F.sum(F.round(F.col("p_retailprice") * 100).cast("long")) / 100.0).alias(
-                "total_price"
-            ),
+            (F.sum(to_units("p_retailprice", 100)) / 100.0).alias("total_price"),
         )
     )
 

@@ -84,6 +84,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduce_lab_spark.functions.numeric import to_units
 from mapreduce_lab_spark.operators.clustering import pq_assign
 from mapreduce_lab_spark.operators.dedup import (
     _O_DOT,
@@ -456,7 +457,7 @@ def q_ivf_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2-row frame, rounded before the cast so 169.0000...3 stays 169.
     trained_cells = k_per_sub.agg(
         F.coalesce(
-            F.round(F.exp(F.sum(F.log("k")))).cast("long"), F.lit(0)
+            to_units(F.exp(F.sum(F.log("k"))), 1), F.lit(0)
         ).alias("trained_cells")
     )
     return occ.agg(

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.guards import ExactBaselineScaleError
-from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio
+from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio, to_units
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
@@ -537,7 +537,7 @@ def quantize_int8(e: DataFrame) -> DataFrame:
     maxabs = F.array_max(F.transform("vn", F.abs))
     q8 = F.when(
         maxabs > 0,
-        F.transform("vn", lambda x: F.round(x * 127 / maxabs).cast("int")),
+        F.transform("vn", lambda x: to_units(x * 127 / maxabs, 1).cast("int")),
     ).otherwise(F.transform("vn", lambda x: F.lit(0)))
     # scale dequantizes a code back to the normalized component:
     # x̂ ≈ q * (maxabs / 127)

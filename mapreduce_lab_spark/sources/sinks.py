@@ -237,7 +237,8 @@ _ORC_WRITTEN: dict[str, str] = {}
 
 def _orc_replica(spark: SparkSession, sf_dir: str) -> str:
     """Write (once per process+sf_dir) the documents table as ORC under
-    /tmp and return the path. Memoized like the IVF index artifacts:
+    the system temp directory (``tempfile.gettempdir()``, so ``TMPDIR``
+    applies) and return the path. Memoized like the IVF index artifacts:
     re-running the query in one process reuses the files; a fresh
     process rewrites them (mode=overwrite, so always self-consistent).
 
@@ -249,11 +250,12 @@ def _orc_replica(spark: SparkSession, sf_dir: str) -> str:
     """
     import hashlib
     import os
+    import tempfile
 
     key = os.path.abspath(sf_dir)
     if key not in _ORC_WRITTEN:
         path = os.path.join(
-            "/tmp",
+            tempfile.gettempdir(),
             f"spark_graft_orc_{os.getpid()}",
             hashlib.sha1(key.encode()).hexdigest()[:16],
         )
@@ -304,7 +306,7 @@ def q_orc_roundtrip_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation-specific column, and the exact char sum — all recomputed
 # by DuckDB from the original table, so a reader that drops v1 rows,
 # misaligns columns, or fails to null-fill breaks the hash gate.
-# Same replica discipline as the ORC census (pid+abspath-keyed /tmp
+# Same replica discipline as the ORC census (pid+abspath-keyed temp-dir
 # path, overwrite mode, process-local memo).
 
 _EVO_WRITTEN: dict[str, str] = {}
@@ -313,11 +315,12 @@ _EVO_WRITTEN: dict[str, str] = {}
 def _evolved_replica(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import os
+    import tempfile
 
     key = os.path.abspath(sf_dir)
     if key not in _EVO_WRITTEN:
         path = os.path.join(
-            "/tmp",
+            tempfile.gettempdir(),
             f"spark_graft_evo_{os.getpid()}",
             hashlib.sha1(key.encode()).hexdigest()[:16],
         )

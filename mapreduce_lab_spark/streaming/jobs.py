@@ -19,6 +19,7 @@ unchanged.
 
 from __future__ import annotations
 
+import math
 import sys
 from collections.abc import Iterator
 
@@ -234,6 +235,16 @@ _RUNNING_SCHEMA = "user_id long, n_events long, total_cents long"
 _STATE_SCHEMA = "n long, cents long"
 
 
+def _cents(v: float) -> int:
+    """Python twin of ``to_units(v, 100)``: round half away from zero.
+    Python's ``round`` alone rounds half to even (12.5 -> 12, where
+    the batch engine and DuckDB give 13); it is ``rint``, so the same
+    exact-tie fix as in functions/numeric.py applies."""
+    x = v * 100
+    r = round(x)
+    return int(x + math.copysign(0.5, x)) if abs(x - r) == 0.5 else r
+
+
 def _running_totals(
     key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
 ) -> Iterator["pd.DataFrame"]:
@@ -246,7 +257,7 @@ def _running_totals(
         # Per-row cent conversion before summing: order-independent
         # exact integers, matching the batch engine's to_units() math
         # (see functions/numeric.py) regardless of batch boundaries.
-        cents += int(sum(int(round(v * 100)) for v in pdf["value"]))
+        cents += sum(_cents(v) for v in pdf["value"])
     state.update((n, cents))
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_cents": [cents]})
 
@@ -297,7 +308,7 @@ class _RunningTotalsProcessor(StatefulProcessor):
         n, cents = self._state.get() if self._state.exists() else (0, 0)
         for pdf in rows:
             n += len(pdf)
-            cents += int(sum(int(round(v * 100)) for v in pdf["value"]))
+            cents += sum(_cents(v) for v in pdf["value"])
         self._state.update((n, cents))
         yield pd.DataFrame(
             {"user_id": [int(key[0])], "n_events": [n], "total_cents": [cents]}

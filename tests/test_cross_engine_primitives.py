@@ -14,8 +14,12 @@ value, over adversarial and random inputs.
 
 from __future__ import annotations
 
+import math
+import random
+
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -151,6 +155,117 @@ def test_units_and_ratio_parity_fuzz(spark, rows):
     finally:
         con.close()
     assert got == [tuple(r) for r in exp]
+
+
+# --- to_units exactness: rint + tie fix vs F.round ------------------------
+#
+# to_units is rint plus an away-from-zero fix on exact .5 ties, and must
+# give the longs of F.round(x * scale).cast("long") (one BigDecimal per
+# row). The fuzz above draws 2-dp values, which never tie; these pin the
+# inputs where half-even and half-up, or binary and decimal rounding,
+# part ways, under both whole-stage codegen and the interpreted path.
+
+UNIT_SCALES = (1, 100, 10_000, 1_000_000)
+
+
+def _tie_values(scale: int) -> list[float]:
+    """Doubles whose product with ``scale`` is exactly k + 0.5, plus
+    their nextafter neighbours."""
+    out = []
+    for k in (*range(-60, 60), 12_345, -987_654, 10**9 + 7, -(2**40) - 1):
+        v = (k + 0.5) / scale
+        for c in (v, math.nextafter(v, -math.inf), math.nextafter(v, math.inf)):
+            if c * scale == k + 0.5:
+                out += [c, math.nextafter(c, -math.inf), math.nextafter(c, math.inf)]
+    return out
+
+
+def _unit_inputs(scale: int) -> list[float | None]:
+    rng = random.Random(scale)
+    top = math.log10(2.0**62 / scale)  # |v * scale| stays inside int64
+    rand = [
+        rng.choice((-1, 1)) * rng.random() * 10 ** rng.uniform(-8, top)
+        for _ in range(300)
+    ]
+    special = [
+        0.49999999999999994, -0.49999999999999994, -0.0, 0.0,
+        2.0**52 - 0.5, -(2.0**52 - 0.5), 2.0**52, 2.0**53 + 2,
+    ]
+    return [None, *_tie_values(scale), *rand, *(special if scale == 1 else [])]
+
+
+def _units_frame(spark, tmp_path, values):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # A parquet scan, not a local relation: the optimizer folds
+    # projections over local rows itself, so codegen would never run.
+    path = str(tmp_path / f"units_{len(list(tmp_path.iterdir()))}.parquet")
+    pq.write_table(
+        pa.table({"i": range(len(values)), "v": pa.array(values, pa.float64())}),
+        path,
+    )
+    return spark.read.parquet(path)
+
+
+def _with_codegen(spark, on: bool, fn):
+    key = "spark.sql.codegen.wholeStage"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(on).lower())
+    try:
+        return fn()
+    finally:
+        spark.conf.set(key, old)
+
+
+def _bigdecimal_units(col, scale: int):
+    return F.round(F.col(col) * F.lit(scale)).cast("long")
+
+
+@pytest.mark.parametrize("codegen", [True, False], ids=["codegen", "interpreted"])
+def test_to_units_matches_round_and_duckdb_on_ties(spark, tmp_path, codegen):
+    con = duckdb.connect()
+    try:
+        for scale in UNIT_SCALES:
+            values = _unit_inputs(scale)
+            df = _units_frame(spark, tmp_path, values).select(
+                "i",
+                to_units("v", scale).alias("u"),
+                _bigdecimal_units("v", scale).alias("ref"),
+            )
+
+            def run():
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                assert ("*(" in plan) == codegen, plan
+                return sorted(tuple(r) for r in df.collect())
+
+            got = _with_codegen(spark, codegen, run)
+            con.register(
+                "t",
+                pd.DataFrame(
+                    {"i": range(len(values)), "v": pd.array(values, dtype="Float64")}
+                ),
+            )
+            duck = [
+                r[0]
+                for r in con.execute(
+                    f"SELECT {oracle_units('v', scale)} FROM t ORDER BY i"
+                ).fetchall()
+            ]
+            assert [u for _, u, _ in got] == [ref for _, _, ref in got], scale
+            assert [u for _, u, _ in got] == duck, scale
+            assert got[0][1] is None  # NULL stays NULL
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("codegen", [True, False], ids=["codegen", "interpreted"])
+@pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf, 1e300])
+def test_to_units_still_raises_cast_overflow(spark, tmp_path, codegen, bad):
+    df = _units_frame(spark, tmp_path, [1.0, bad])
+    for units in (to_units("v", 100), _bigdecimal_units("v", 100)):
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            _with_codegen(spark, codegen, df.select(units).collect)
 
 
 # --- dot-product twins (round 13) ------------------------------------------

@@ -197,6 +197,7 @@ def test_audit_lists_name_only_registered_queries():
             *DUP_SCAN_AUDITED,
             *ROW_PYTHON_AUDITED,
             *HEAVY_FILTER_AUDITED,
+            *ROUND_CAST_AUDITED,
         )
         if n not in registered
     ]
@@ -441,3 +442,63 @@ def test_scan_counts_immune_to_leftover_caches(spark, sf_dir):
     dirty = live_scan_counts(q[b](spark, sf_dir))
     spark.catalog.clearCache()
     assert clean == dirty, (clean, dirty)
+
+
+# 7. **Integer units through to_units only.** Spark evaluates
+# ``round(x, 0)`` on a DOUBLE with one ``BigDecimal`` per row, so a
+# ``cast(round(..., 0) as bigint)`` in a plan is the slow spelling of
+# functions/numeric.py's ``to_units`` (rint plus an exact-tie fix, the
+# same longs). Every query must build its units with ``to_units``;
+# what remains is Spark SQL text that DuckDB executes too, whose
+# ``round()`` stays so that one string serves both engines.
+_SHARED_SQL = "shared Spark/DuckDB SQL text (operators/{}.py): one round() serves both engines"
+ROUND_CAST_AUDITED = {
+    "not_exists_no_big_order": _SHARED_SQL.format("subqueries"),
+    "scalar_subquery_above_avg_price": _SHARED_SQL.format("subqueries"),
+    "q17_small_quantity_revenue": _SHARED_SQL.format("subqueries"),
+    "q2_cheapest_supplier_per_part": _SHARED_SQL.format("subqueries"),
+    "argmax_orders_probe": _SHARED_SQL.format("sql_surface"),
+}
+
+
+def _round_casts(plan: str) -> list[str]:
+    """Every ``cast(round(<e>, 0) as bigint|int)`` in the plan text."""
+    hits = []
+    for m in _re.finditer(r"cast\(round\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        cast_to = _re.match(r" as (bigint|int)\)", plan[i:])
+        if cast_to and plan[m.end() : i - 1].endswith(", 0"):
+            hits.append(plan[m.start() : i + cast_to.end()])
+    return hits
+
+
+def test_no_bigdecimal_round_to_integer_units(plans):
+    offenders = {
+        n: hits[0]
+        for n, p in plans.items()
+        if n not in ROUND_CAST_AUDITED
+        for hits in [_round_casts(p)]
+        if hits
+    }
+    assert offenders == {}, (
+        f"per-row round(..., 0) cast to an integer in {sorted(offenders)}; "
+        "use functions.numeric.to_units (same longs, no BigDecimal per row) "
+        f"or audit here with a reason: {offenders}"
+    )
+
+
+def test_round_cast_audit_list_not_stale(plans):
+    stale = [n for n in ROUND_CAST_AUDITED if n in plans and not _round_casts(plans[n])]
+    assert stale == [], f"ROUND_CAST_AUDITED entries no longer needed: {stale}"
+
+
+def test_round_cast_detector():
+    assert _round_casts(
+        "Project [cast(round((price#1 * 100.0), 0) as bigint) AS u#2]"
+    ) == ["cast(round((price#1 * 100.0), 0) as bigint)"]
+    assert _round_casts("cast(round(x#1, 0) as int)") == ["cast(round(x#1, 0) as int)"]
+    # rounding to decimals, or a round that is not cast, is not units
+    assert _round_casts("cast(round(x#1, 2) as bigint), round((y#2 * 100.0), 0)") == []

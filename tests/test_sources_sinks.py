@@ -301,3 +301,19 @@ def test_orc_replica_paths_do_not_collide_on_basename(spark, tmp_path):
     assert p1 == _orc_replica(spark, dirs[0])  # memo hit on abs path
     assert spark.read.orc(p1).count() == 3
     assert spark.read.orc(p2).count() == 5
+
+
+def test_replicas_land_under_the_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """The ORC and schema-evolution replicas follow the temp directory
+    the process is given (tempfile.gettempdir(), so TMPDIR), not a
+    hard-coded /tmp."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(sinks, "_ORC_WRITTEN", {})
+    monkeypatch.setattr(sinks, "_EVO_WRITTEN", {})
+    for replica in (sinks._orc_replica, sinks._evolved_replica):
+        path = replica(spark, sf_dir)
+        assert path.startswith(str(tmp_path) + os.sep), path
+        assert os.listdir(path)

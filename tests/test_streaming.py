@@ -372,6 +372,40 @@ def test_streaming_running_totals_match_batch(spark, stream_dir):
     assert _rows(got) == _rows(want)
 
 
+def test_running_totals_round_half_cents_away_from_zero():
+    """An exact half-cent (0.125 -> 12.5 units) rounds away from zero,
+    like to_units and DuckDB's round (13), not half to even like
+    Python's round (12)."""
+    import duckdb
+    import pandas as pd
+
+    from mapreduce_lab_spark.functions.numeric import oracle_units
+
+    values = [0.125, -0.125, 1.125, 0.375, 2.5, -2.5, 0.0049999999999999994, 19.99]
+    want = [
+        r[0]
+        for r in duckdb.execute(
+            f"SELECT {oracle_units('v', 100)} FROM unnest(?::DOUBLE[]) AS t(v)",
+            [values],
+        ).fetchall()
+    ]
+    assert [jobs._cents(v) for v in values] == want
+    assert want[:3] == [13, -13, 113]
+
+    class _State:
+        exists = False
+
+        def update(self, value):
+            self.value = value
+
+    state = _State()
+    (out,) = jobs._running_totals((7,), iter([pd.DataFrame({"value": values})]), state)
+    assert state.value == (len(values), sum(want))
+    assert out.to_dict("records") == [
+        {"user_id": 7, "n_events": len(values), "total_cents": sum(want)}
+    ]
+
+
 def _has_protobuf() -> bool:
     try:
         from google.protobuf import descriptor  # noqa: F401
