@@ -227,6 +227,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from mapreduce_lab_spark import registry
+    from mapreduce_lab_spark.session import CODEGEN_CACHE_ENTRIES
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
@@ -238,6 +239,9 @@ def main() -> None:
         # the driver's stdout tail buffer in round 2 (parsed: null).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # The headline queries generate far more than Spark's default
+        # 100 cached classes; a smaller cache recompiles every pass.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

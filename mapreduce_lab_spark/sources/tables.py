@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,13 +34,52 @@ TABLES = (
 # Fact tables must never be broadcast.
 BROADCAST_SAFE = frozenset({"region", "nation", "supplier"})
 
+# Reader confs that change the types Spark infers from a Parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# path -> (file identity + _SCHEMA_CONFS values, inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one table of the star schema.
+
+    The scan's schema is inferred once per file and reused while the
+    file is unchanged (``_read_parquet``): inference runs a Spark job
+    to read the footer, ~0.1 s per call on a warm session against
+    ~0.02 s with a known schema, and every query loads its tables
+    again."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema only once.
+
+    A hit is keyed on the file's inode, size and mtime and on the reader
+    confs that change inferred types, so a file rewritten in place or a
+    conf change infers again. Each call builds a fresh relation, so
+    self-joins still get distinct attribute ids. Directories (whose
+    schema depends on every file in them), URIs and missing paths always
+    infer."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    key = (st.st_ino, st.st_size, st.st_mtime_ns, *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == key:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
@@ -78,7 +118,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     return df.withColumn("ts", _normalize_ts(df.schema["ts"].dataType))
 
 

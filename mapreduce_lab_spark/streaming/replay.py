@@ -426,8 +426,9 @@ def q_streaming_weak_label_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from mapreduce_lab_spark.functions.numeric import exact_ratio
     from mapreduce_lab_spark.operators.classify import weak_label_votes
+    from mapreduce_lab_spark.sources.tables import _read_parquet
 
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = _read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
     sdocs = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -466,8 +467,9 @@ def q_streaming_benford_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduce_lab_spark.functions.numeric import exact_ratio, to_units
     from mapreduce_lab_spark.operators.quality import BENFORD_EXPECTED
+    from mapreduce_lab_spark.sources.tables import _read_parquet
 
-    schema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
+    schema = _read_parquet(spark, os.path.join(sf_dir, "orders.parquet")).schema
     sorders = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet")

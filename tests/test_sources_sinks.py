@@ -317,3 +317,57 @@ def test_replicas_land_under_the_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
         path = replica(spark, sf_dir)
         assert path.startswith(str(tmp_path) + os.sep), path
         assert os.listdir(path)
+
+
+def _jobs_started(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_load_table_reuses_the_inferred_schema(spark, sf_dir, tmp_path):
+    """Schema inference runs a Spark job per read; a second load of an
+    unchanged file must start none, with the schema inference gives. A
+    file rewritten in place with another column is inferred again."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nation.parquet")
+    shutil.copy(f"{sf_dir}/nation.parquet", path)
+    first, jobs = _jobs_started(spark, "schema-cold", lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs, "inference should start a job (or this test proves nothing)"
+    again, jobs = _jobs_started(spark, "schema-warm", lambda: load_table(spark, str(tmp_path), "nation"))
+    assert jobs == []
+    assert again.schema == first.schema == spark.read.parquet(path).schema
+    assert _rows(again) == _rows(first)
+
+    table = pq.read_table(path)
+    pq.write_table(table.append_column("n_extra", pa.array(range(table.num_rows))), path)
+    rewritten = load_table(spark, str(tmp_path), "nation")
+    assert "n_extra" in rewritten.columns
+    assert rewritten.schema == spark.read.parquet(path).schema
+    assert rewritten.where("n_extra = n_nationkey").count() == table.num_rows
+
+
+def test_events_ts_type_is_the_same_from_the_schema_cache(spark, sf_dir, tmp_path):
+    import shutil
+
+    from pyspark.sql.types import TimestampType
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    inferred = load_table(spark, str(tmp_path), "events")
+    cached, jobs = _jobs_started(spark, "events-warm", lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == []
+    assert isinstance(cached.schema["ts"].dataType, TimestampType)
+    assert cached.schema == inferred.schema
+    span = [F.min("ts"), F.max("ts"), F.count("ts")]
+    assert cached.agg(*span).collect() == inferred.agg(*span).collect()
