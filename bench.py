@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import subprocess
 import sys
 import time
 
@@ -223,27 +225,30 @@ PRIMARY_INPUT = {
 }
 
 
+def bench_round(repo_dir: str) -> int:
+    """The round a bench run belongs to: one past the newest COMMITTED
+    ``BENCH_r*.json``. A multi-leg driver writes ``BENCH_r{N}.json``
+    after its first leg, so counting files on disk would put every
+    later leg of the same round in round N+1. Outside a git checkout
+    the files in ``repo_dir`` are all there is to count."""
+    try:
+        names = subprocess.run(
+            ["git", "ls-files", "BENCH_r*.json"],
+            cwd=repo_dir, capture_output=True, text=True, check=True,
+        ).stdout.split()
+    except (OSError, subprocess.CalledProcessError):
+        names = os.listdir(repo_dir)
+    rounds = [
+        int(m.group(1)) for p in names if (m := re.fullmatch(r"BENCH_r(\d+)\.json", p))
+    ]
+    return max(rounds, default=0) + 1
+
+
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from mapreduce_lab_spark import registry
-    from mapreduce_lab_spark.session import CODEGEN_CACHE_ENTRIES
+    from mapreduce_lab_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("mapreduce_lab_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # \r progress lines interleaved with the metric line overflowed
-        # the driver's stdout tail buffer in round 2 (parsed: null).
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # The headline queries generate far more than Spark's default
-        # 100 cached classes; a smaller cache recompiles every pass.
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .getOrCreate()
-    )
+    spark = get_spark("mapreduce_lab_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = registry.queries()
@@ -374,15 +379,7 @@ def main() -> None:
     here = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.environ.get("SPARK_GRAFT_DETAIL_PATH")
     if not detail_path:
-        import glob as _glob
-        import re as _re
-
-        rounds = [
-            int(m.group(1))
-            for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        n = max(rounds, default=0) + 1
+        n = bench_round(here)
         detail_path = os.path.join(here, f"BENCH_DETAIL_r{n:02d}_c{int(CPUS)}.json")
     try:
         with open(detail_path, "w") as f:

@@ -7,15 +7,14 @@ driver checks rows-only). ``__spark_entry__.py`` just re-exports the
 two dicts.
 
 Registration happens at import time; ``load_all()`` imports every
-operator module so the registry is complete.
+operator module so the registry is complete. ``queries()``,
+``oracles()`` and ``describe()`` list names round-robin across the
+operator modules, so every family appears early in each listing.
 """
 
 from __future__ import annotations
 
-import hashlib
 import importlib
-import json
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +29,7 @@ _ORACLES: dict[str, str] = {}
 # source. Populated by the decorator's ``meta`` kwarg.
 _META: dict[str, dict[str, str]] = {}
 # Registration order per defining module, used to interleave families
-# in queries()/oracles() output order (see _interleaved_names).
+# in queries()/oracles() output order (see _ordered_names).
 _BY_MODULE: dict[str, list[str]] = {}
 
 _OPERATOR_MODULES = [
@@ -48,12 +47,6 @@ _OPERATOR_MODULES = [
     "mapreduce_lab_spark.operators.events",
     "mapreduce_lab_spark.operators.timeseries",
     "mapreduce_lab_spark.operators.lifecycle",
-    # streaming.replay sits high in the lane order deliberately: its
-    # family is the least driver-sampled (the watermark/late-data
-    # replays had no official row through round 4), and the weave
-    # emits one lane entry per pass — an early lane means each pass's
-    # streaming entry lands ~15 positions earlier in the prefix a
-    # sampling driver reads.
     "mapreduce_lab_spark.streaming.replay",
     "mapreduce_lab_spark.operators.dedup",
     "mapreduce_lab_spark.operators.similarity",
@@ -121,216 +114,24 @@ def load_all() -> None:
         importlib.import_module(mod)
 
 
-def oracle_signatures() -> dict[str, str]:
-    """md5 of each registered oracle SQL string (whitespace-insensitive
-    so a pure reformat doesn't read as a semantic change). The snapshot
-    records, per query, this signature as of its LAST official driver
-    sample; a live mismatch means the oracle was rewritten since the
-    driver last looked, and the query needs a fresh row (VERDICT r12
-    #1 — last-bad front-loading alone never resamples an
-    oracle-UPGRADED query whose old rows were all green)."""
-    load_all()
-    return {
-        n: hashlib.md5(" ".join(sql.split()).encode()).hexdigest()
-        for n, sql in _ORACLES.items()
-    }
-
-
-def _load_snapshot() -> dict:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "driver_seen.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return data if isinstance(data, dict) else {}
-
-
-def _stale_oracle_queries(snapshot: dict | None = None) -> set[str]:
-    """Registered queries whose CURRENT oracle differs from the one
-    their last official driver row was checked under — by class
-    (rows-only vs oracled) or by SQL signature — plus the snapshot's
-    explicit ``stale_seed`` (one-time migration entries written by
-    scripts/update_seen.py for rewrites that predate signature
-    tracking). These get the same position-0 treatment as last-bad:
-    an upgraded gate is invisible until the driver resamples it."""
-    snap = _load_snapshot() if snapshot is None else snapshot
-    if not snap:
-        return set()
-    live_sig = oracle_signatures()
-    stale: set[str] = {n for n in snap.get("stale_seed", []) if n in _QUERIES}
-    last_class: dict[str, str] = snap.get("last_class", {})
-    last_sig: dict[str, str] = snap.get("oracle_sig", {})
-    for n in _QUERIES:
-        cls = "oracled" if n in live_sig else "rows_only"
-        if n in last_class and last_class[n] != cls:
-            stale.add(n)
-        elif n in last_sig and n in live_sig and last_sig[n] != live_sig[n]:
-            stale.add(n)
-    return stale
-
-
-def _previously_sampled() -> tuple[set[str], int, set[str]]:
-    """(query names with a driver correctness row, number of committed
-    rounds), read from the PINNED snapshot ``driver_seen.json`` next
-    to this module.
-
-    The snapshot is regenerated by ``scripts/update_seen.py`` (which
-    reads the ``CORRECTNESS_r*.json`` artifacts at the repo root) and
-    COMMITTED — the registry never globs the artifacts live. Round 4
-    showed why: the driver writes a new artifact between builder
-    commits, so live-globbed ordering changed under the driver's feet
-    mid-round and made any ordering-adjacent test (the plan-hygiene
-    sweep) flip depending on which artifacts had landed. With the
-    snapshot, ``queries()`` order is a pure function of committed repo
-    state the builder controls.
-
-    Used only to ROTATE ordering (below); returns empty — and ordering
-    degrades gracefully to plain interleaving — if the snapshot is
-    absent (fresh checkout before any driver round).
-
-    Third element (round 12, VERDICT r11 #2): the ``last_bad`` set —
-    queries whose MOST RECENT driver row was a crash or a gate
-    mismatch. The rotation front-loads these at position 0 so a fixed
-    query gets its clean official row the very next round instead of
-    waiting on round-count luck (``ivf_train_codebook`` sat fixed but
-    officially red for a full round at rotation position 65).
-    """
-    data = _load_snapshot()
-    return (
-        set(data.get("seen", [])),
-        int(data.get("rounds", 0)),
-        set(data.get("last_bad", [])),
-    )
-
-
-# A prefix-sampling driver has checked exactly this many queries per
-# round for five straight rounds; the endgame ordering budgets for it.
-DRIVER_PREFIX = 50
-
-
-def _interleaved_names() -> list[str]:
-    """Order queries so any driver prefix is maximally informative.
-
-    The dict ordering here is the order a correctness driver visits
-    queries in. A flat module-by-module ordering means a driver that
-    checks only the first N queries (by count or time budget) never
-    reaches whole families at the tail — in round 1 the first 49
-    entries stopped mid-TPC-H, leaving windows/events/dedup/similarity/
-    textstats/multimodal with no driver row at all.
-
-    Two regimes, switched on how many never-driver-sampled queries
-    remain (the committed ``driver_seen.json`` snapshot):
-
-    EARLY (unseen queries + families exceed the driver prefix): a head
-    of one query per family (unseen preferred, else a round-rotated
-    re-check) so any >=|families| prefix samples every family, then a
-    weave of the remaining unseen 3:1 with rotating re-checks — ~75%
-    fresh coverage, ~25% regression re-checks per prefix (ADVICE r3:
-    pure unseen-first never re-checks; pure static never finishes).
-
-    ENDGAME (all remaining unseen fit in the driver prefix alongside
-    >=5 re-checks): emit EVERY unseen query first (woven round-robin
-    across families so the fresh block itself stays family-diverse),
-    then one re-check per family the fresh block didn't touch, then
-    the remaining re-checks rotated by round count. A 50-query prefix
-    then closes the entire first-time-coverage tail in one round while
-    still carrying 50-|unseen| regression re-checks; family coverage
-    completes by position |unseen|+|families| (pinned in
-    tests/test_harness_strictness.py). The old always-full-head shape
-    mathematically capped first-time rows at prefix-|seen families|
-    (19/round by round 5), which could never close a 28-query tail.
-    """
-    seen, n_rounds, last_bad = _previously_sampled()
-    lanes = [list(_BY_MODULE.get(m, [])) for m in _OPERATOR_MODULES]
-    for m in _BY_MODULE:  # modules not in the canonical list, if any
-        if m not in _OPERATOR_MODULES:
-            lanes.append(list(_BY_MODULE[m]))
-    lanes = [lane for lane in lanes if lane]
-
-    def weave(split_lanes: list[list[str]]) -> list[str]:
-        mx = max((len(lane) for lane in split_lanes), default=0)
-        return [lane[i] for i in range(mx) for lane in split_lanes if i < len(lane)]
-
-    fresh_all = weave([[n for n in lane if n not in seen] for lane in lanes])
-
-    if seen and 0 < len(fresh_all) <= DRIVER_PREFIX - 5:
-        # ENDGAME: drain the whole unseen tail inside one driver prefix.
-        cover: list[str] = []  # one re-check per family fresh missed
-        rest_lanes: list[list[str]] = []
-        for lane in lanes:
-            lane_seen = [n for n in lane if n in seen]
-            if not lane_seen:
-                continue
-            if any(n not in seen for n in lane):  # family already in fresh block
-                rest_lanes.append(lane_seen)
-            else:
-                k = n_rounds % len(lane_seen)
-                cover.append(lane_seen[k])
-                rest_lanes.append(lane_seen[:k] + lane_seen[k + 1 :])
-        resample = weave(rest_lanes)
-        if resample:
-            k = (n_rounds * max(1, len(resample) // 4)) % len(resample)
-            resample = resample[k:] + resample[:k]
-        return _front_load_bad(
-            fresh_all + cover + resample, last_bad | _stale_oracle_queries()
-        )
-
-    # EARLY regime: family head, then 3:1 fresh:re-check weave.
-    head: list[str] = []
-    for lane in lanes:
-        unseen_lane = [n for n in lane if n not in seen]
-        head.append(unseen_lane[0] if unseen_lane else lane[n_rounds % len(lane)])
-    picked = set(head)
-
-    rest = [[n for n in lane if n not in picked] for lane in lanes]
-    fresh = weave([[n for n in lane if n not in seen] for lane in rest])
-    resample = weave([[n for n in lane if n in seen] for lane in rest])
-    if resample:
-        k = (n_rounds * max(1, len(resample) // 4)) % len(resample)
-        resample = resample[k:] + resample[:k]
-    out = head
-    head_rechecks = sum(1 for n in head if n in seen)
-    fresh_per_reseen = len(fresh) + 1 if head_rechecks >= 5 else 3
-    fi = ri = 0
-    while fi < len(fresh) or ri < len(resample):
-        for _ in range(fresh_per_reseen):
-            if fi < len(fresh):
-                out.append(fresh[fi])
-                fi += 1
-        if ri < len(resample):
-            out.append(resample[ri])
-            ri += 1
-    return _front_load_bad(out, last_bad | _stale_oracle_queries())
-
-
-def _front_load_bad(order: list[str], last_bad: set[str]) -> list[str]:
-    """Move urgent queries to the very front of the ordering (relative
-    order preserved): those whose LAST official driver row was a crash
-    or gate mismatch (VERDICT r11 #2: the ``ivf_train_codebook`` fix
-    landed in r11 but sat at rotation position 65, outside the
-    50-query driver prefix), plus — since round 13 — those whose
-    oracle was upgraded/rewritten after their last sample
-    (``_stale_oracle_queries``; VERDICT r12 #1). A fix or a new gate
-    is invisible until the driver resamples the query; position 0
-    makes that deterministic on the next round rather than
-    round-count luck."""
-    urgent = [n for n in order if n in last_bad]
-    if not urgent:
-        return order
-    return urgent + [n for n in order if n not in last_bad]
+def _ordered_names() -> list[str]:
+    """Round-robin over the operator-module lanes: one query from each
+    module in ``_OPERATOR_MODULES`` order, then the next from each, so
+    any prefix of at least one name per module covers every family."""
+    lanes = [_BY_MODULE.get(m, []) for m in _OPERATOR_MODULES]
+    lanes += [names for m, names in _BY_MODULE.items() if m not in _OPERATOR_MODULES]
+    depth = max((len(lane) for lane in lanes), default=0)
+    return [lane[i] for i in range(depth) for lane in lanes if i < len(lane)]
 
 
 def queries() -> dict[str, QueryFn]:
     load_all()
-    order = _interleaved_names()
-    return {n: _QUERIES[n] for n in order}
+    return {n: _QUERIES[n] for n in _ordered_names()}
 
 
 def oracles() -> dict[str, str]:
     load_all()
-    order = _interleaved_names()
-    return {n: _ORACLES[n] for n in order if n in _ORACLES}
+    return {n: _ORACLES[n] for n in _ordered_names() if n in _ORACLES}
 
 
 def describe() -> dict[str, dict[str, str]]:
@@ -344,7 +145,7 @@ def describe() -> dict[str, dict[str, str]]:
     import sys
 
     out: dict[str, dict[str, str]] = {}
-    for n in _interleaved_names():
+    for n in _ordered_names():
         fn = _QUERIES[n]
         doc = (fn.__doc__ or "").strip()
         if not doc:  # thin @query wrappers document at module level

@@ -47,6 +47,13 @@ def get_spark(
       driver Metaspace from 78 to 245 MB, so 8192 holds every class the
       registry generates with headroom. It is a static conf: it only
       takes effect when this call creates the JVM.
+    - ``spark.ui.showConsoleProgress`` off: PySpark launches as
+      ``pyspark-shell``, which turns the carriage-return progress bar
+      on, and those lines break any driver that parses a script's stdout
+      (bench.py's metric line came back unparsed in round 2).
+
+    This is the repo's only ``SparkSession.builder``: benches, scripts
+    and tests all run under these settings.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -64,6 +71,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )

@@ -53,20 +53,11 @@ SKIP = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from mapreduce_lab_spark import registry
+    from mapreduce_lab_spark.session import get_spark
     from mapreduce_lab_spark.testing import live_scan_counts
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("audit-scans")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("audit-scans", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     show_all = "--all" in sys.argv

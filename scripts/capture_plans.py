@@ -22,25 +22,15 @@ sys.path.insert(0, ROOT)
 
 from mapreduce_lab_spark import registry  # noqa: E402
 from mapreduce_lab_spark.plans.inspect import formatted_plan  # noqa: E402
+from mapreduce_lab_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("plan-capture")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     if not names:

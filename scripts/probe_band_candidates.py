@@ -8,6 +8,8 @@ quadratic growth of a constant-bucket scheme can be measured at
 scales where actually running the join would be prohibitive.
 
 Usage: python scripts/probe_band_candidates.py SF_DIR [SF_DIR ...]
+(sf10 needs a bigger driver heap than get_spark's 8g default:
+SPARK_GRAFT_DRIVER_MEM=48g python scripts/probe_band_candidates.py ...)
 Prints one JSON line per (sf_dir, family) with rows, buckets,
 candidate pairs, and max bucket occupancy.
 """
@@ -20,12 +22,13 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.operators.dedup import (
     _dvec,
     _rp_band_vals,
 )
+from mapreduce_lab_spark.session import get_spark
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
 
@@ -50,13 +53,7 @@ def census(df, keys: list[str]) -> dict:
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .appName("probe-band-candidates")
-        .getOrCreate()
-    )
+    spark = get_spark("probe-band-candidates")
     for sf_dir in sys.argv[1:]:
         e = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
             "vec_id", _dvec("embedding").alias("v")

@@ -11,6 +11,8 @@ cell. Run against sf0.1 / sf1 / sf10 to verify cand_pairs grows ~n
 where the sign-LSH census grew ~n² (docs/SCALE.md round-9 table).
 
 Usage: python scripts/probe_ivf_candidates.py SF_DIR [SF_DIR ...]
+(sf10 needs a bigger driver heap than get_spark's 8g default:
+SPARK_GRAFT_DRIVER_MEM=48g python scripts/probe_ivf_candidates.py ...)
 """
 
 from __future__ import annotations
@@ -22,21 +24,11 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import SparkSession
+from mapreduce_lab_spark.session import get_spark
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("probe-ivf-candidates")
-        .getOrCreate()
-    )
+    spark = get_spark("probe-ivf-candidates")
     spark.sparkContext.setLogLevel("ERROR")
 
     from pyspark.sql import functions as F

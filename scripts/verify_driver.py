@@ -49,16 +49,9 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main():
-    from pyspark.sql import SparkSession
+    from mapreduce_lab_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify-driver-sim")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("verify-driver-sim", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E

@@ -19,16 +19,12 @@ import sys
 _SCRIPT = r"""
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-spark = (
-    SparkSession.builder.master("local[4,3]")  # up to 3 attempts per task
-    .appName("retry-proof")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+from mapreduce_lab_spark.session import get_spark
+
+# local[4,3]: up to 3 attempts per task
+spark = get_spark("retry-proof", master="local[4,3]", shuffle_partitions=4)
 spark.sparkContext.setLogLevel("ERROR")
 
 

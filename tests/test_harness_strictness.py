@@ -10,8 +10,9 @@ Round-1 driver gate caught two defects the local harness missed:
 
 2. The driver emitted correctness rows only for a prefix of
    queries()'s ordering, and the flat module-by-module ordering left
-   whole families unsampled. The registry now interleaves families;
-   pin that property so a reorder can't silently regress it.
+   whole families unsampled. The registry lists names round-robin
+   across operator modules; pin that order so any prefix of one name
+   per module covers every family.
 """
 
 from __future__ import annotations
@@ -57,71 +58,21 @@ def test_new_exact_sum_form_is_shared_sql_safe(spark, duck, sf_dir):
 
 
 def test_registry_prefix_samples_every_family():
-    """Family coverage completes within a bounded prefix. In the EARLY
-    regime that bound is |families| (one-per-family head; the round-1
-    driver checked exactly the first 49 registered queries). In the
-    ENDGAME regime (all unseen fit in one driver prefix) the fresh
-    block comes first, so the bound is |unseen| + |families|."""
+    """queries() lists names round-robin over the module lanes in
+    _OPERATOR_MODULES order, so its first len(_BY_MODULE) names hold one
+    query of every family; oracles() and describe() keep that order."""
     names = list(registry.queries())
-    seen, _, last_bad = registry._previously_sampled()
-    n_unseen = sum(1 for n in names if n not in seen)
-    n_families = len(registry._BY_MODULE)
-    endgame = seen and 0 < n_unseen <= registry.DRIVER_PREFIX - 5
-    bound = (n_unseen + n_families) if endgame else max(49, n_families)
-    # front-loaded urgent queries (last-bad since r12, stale-oracle
-    # since r13) prepend to the ordering, shifting the family head
-    # window by their count
-    urgent = last_bad | registry._stale_oracle_queries()
-    bound += sum(1 for n in names if n in urgent)
-    prefix_mods = {registry._QUERIES[n].__module__ for n in names[:bound]}
-    assert len(prefix_mods) == n_families, (
-        f"first {bound} queries cover {len(prefix_mods)}/{n_families} families"
-    )
+    by_module = registry._BY_MODULE
+    lanes = [by_module[m] for m in registry._OPERATOR_MODULES if m in by_module]
+    assert len(lanes) == len(by_module)
+    depth = max(len(lane) for lane in lanes)
+    assert names == [lane[i] for i in range(depth) for lane in lanes if i < len(lane)]
 
+    head = {registry._QUERIES[n].__module__ for n in names[: len(by_module)]}
+    assert head == set(by_module)
 
-def test_registry_endgame_prefix_drains_unseen_tail():
-    """When the never-driver-sampled tail fits in one driver prefix
-    (with >=5 re-check slots left over), EVERY unseen query must appear
-    in the first DRIVER_PREFIX positions — otherwise first-time
-    coverage can never close (the old full-head shape capped fresh rows
-    at prefix minus seen-family count)."""
-    seen, _, _ = registry._previously_sampled()
-    names = list(registry.queries())
-    unseen = [n for n in names if n not in seen]
-    if not seen or not (0 < len(unseen) <= registry.DRIVER_PREFIX - 5):
-        return  # not in the endgame regime
-    prefix = set(names[: registry.DRIVER_PREFIX])
-    missing = [n for n in unseen if n not in prefix]
-    assert not missing, f"unseen queries outside the driver prefix: {missing}"
-
-
-def test_registry_order_immune_to_new_driver_artifacts(tmp_path):
-    """META-TEST for the round-4 failure mode: the driver writes
-    CORRECTNESS_r{N}.json AFTER the builder's last commit, so any
-    queries() ordering derived from live-globbing those artifacts
-    changes under the driver's feet mid-round (and flipped the plan-
-    hygiene sweep). Ordering must depend only on the COMMITTED
-    driver_seen.json snapshot: dropping a synthetic new artifact at
-    the repo root must not move a single query."""
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
-    synthetic = os.path.join(root, "CORRECTNESS_r99.json")
-    assert not os.path.exists(synthetic)
-    before = list(registry.queries())
-    # Plausible artifact content: marks every currently-unseen query
-    # seen — the strongest possible perturbation of the old scheme.
-    import json
-
-    seen, _, _ = registry._previously_sampled()
-    payload = {n: {"rows_match": True} for n in before if n not in seen}
-    try:
-        with open(synthetic, "w") as f:
-            json.dump(payload, f)
-        after = list(registry.queries())
-    finally:
-        os.remove(synthetic)
-    assert before == after
+    assert list(registry.oracles()) == [n for n in names if n in registry._ORACLES]
+    assert list(registry.describe()) == names
 
 
 def test_every_query_has_unique_name_and_callable():
@@ -129,57 +80,6 @@ def test_every_query_has_unique_name_and_callable():
     assert len(q) >= 91
     for name, fn in q.items():
         assert callable(fn), name
-
-
-def test_registry_prefix_mixes_fresh_and_resample():
-    """A prefix-sampling driver must get BOTH first-time queries (to
-    grow coverage) and re-checks of already-verified ones (to catch
-    regressions — ADVICE r3: pure unseen-first ordering means a
-    verified query is never re-checked). Only meaningful once
-    CORRECTNESS_r*.json artifacts exist."""
-    seen, _, _ = registry._previously_sampled()
-    names = list(registry.queries())[:50]
-    if not seen or len(seen) >= len(registry._QUERIES):
-        return  # fresh checkout or everything verified: nothing to mix
-    n_resample = sum(1 for n in names if n in seen)
-    n_fresh = len(names) - n_resample
-    total_unseen = sum(1 for n in registry._QUERIES if n not in seen)
-    # coverage keeps growing (bounded by how many unseen still exist)
-    assert n_fresh >= min(25, total_unseen), (n_fresh, n_resample)
-    assert n_resample >= 5, (n_fresh, n_resample)   # regressions get caught
-
-
-def test_driver_seen_snapshot_staleness_warns_not_gates():
-    """Non-gating staleness guard (ADVICE r5): the pinned
-    driver_seen.json must be regenerated (scripts/update_seen.py) each
-    round start. If the repo root holds CORRECTNESS_r*.json artifacts
-    the snapshot has not folded in, WARN — never fail, because the
-    driver legitimately drops a new artifact AFTER the builder's last
-    commit (the round-4 live-glob failure mode this snapshot exists to
-    avoid)."""
-    import glob
-    import json
-    import os
-    import warnings
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
-    snap_path = os.path.join(root, "mapreduce_lab_spark", "driver_seen.json")
-    try:
-        with open(snap_path) as f:
-            snap = json.load(f)
-    except (OSError, ValueError):
-        return  # fresh checkout: registry degrades gracefully
-    have = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    )
-    folded = sorted(snap.get("source_artifacts", []))
-    if have != folded:
-        warnings.warn(
-            f"driver_seen.json is stale: snapshot folded {folded} but repo "
-            f"root has {have} — run scripts/update_seen.py and commit",
-            stacklevel=1,
-        )
 
 
 def test_describe_surfaces_lane_routing():
@@ -200,143 +100,3 @@ def test_describe_surfaces_lane_routing():
     assert d["near_dup_embedding_ivf_pinned"]["lane"] == "oracle-contract"
     assert d["ivf_init_codebook"]["oracle"] == "full"
     assert d["ivf_train_codebook"]["oracle"] == "rows-only"
-
-
-def test_registry_front_loads_last_bad_queries():
-    """VERDICT r11 #2: a query whose LAST official driver row was a
-    crash or gate mismatch must occupy the very front of queries()
-    ordering, so the fix (if any) gets a fresh driver row the next
-    round deterministically instead of by rotation luck. Checked both
-    against the committed snapshot and with a synthetic last_bad."""
-    seen, _, last_bad = registry._previously_sampled()
-    names = list(registry.queries())
-    # committed-snapshot behavior: every still-registered urgent query
-    # (last-bad or stale-oracle) sits in the front block
-    urgent = last_bad | registry._stale_oracle_queries()
-    live_urgent = [n for n in names if n in urgent]
-    assert names[: len(live_urgent)] == live_urgent
-    # synthetic: front-loading preserves relative order and membership
-    order = ["a", "b", "c", "d", "e"]
-    out = registry._front_load_bad(order, {"d", "b"})
-    assert out == ["b", "d", "a", "c", "e"]
-    assert registry._front_load_bad(order, set()) == order
-    # a last_bad name no longer registered must not be injected
-    assert registry._front_load_bad(order, {"zz"}) == order
-
-
-def test_registry_front_loads_oracle_upgraded_queries():
-    """VERDICT r12 #1: last-bad front-loading is blind to oracle
-    UPGRADES — a query whose driver history is all green (or
-    rows-only-clean) but whose oracle class or SQL changed since its
-    last sample must also reach position 0, or the new gate never
-    gets an official row. The snapshot records class + signature at
-    last sample; the registry compares against the live registry."""
-    sigs = registry.oracle_signatures()
-    # synthetic snapshots against the LIVE registry
-    some_oracled = "wordcount"
-    some_rows_only = "ivf_train_codebook"
-    assert some_oracled in sigs and some_rows_only not in sigs
-
-    # class upgrade: last sampled rows-only, now oracled
-    snap = {"last_class": {some_oracled: "rows_only"}, "oracle_sig": {}}
-    assert some_oracled in registry._stale_oracle_queries(snap)
-    # class downgrade: last sampled oracled, now rows-only
-    snap = {"last_class": {some_rows_only: "oracled"}, "oracle_sig": {}}
-    assert some_rows_only in registry._stale_oracle_queries(snap)
-    # signature drift: same class, rewritten SQL
-    snap = {
-        "last_class": {some_oracled: "oracled"},
-        "oracle_sig": {some_oracled: "0" * 32},
-    }
-    assert some_oracled in registry._stale_oracle_queries(snap)
-    # agreement: nothing stale
-    snap = {
-        "last_class": {some_oracled: "oracled", some_rows_only: "rows_only"},
-        "oracle_sig": {some_oracled: sigs[some_oracled]},
-    }
-    assert registry._stale_oracle_queries(snap) == set()
-    # stale_seed is honored but never injects unregistered names
-    snap = {"stale_seed": [some_oracled, "zz"], "last_class": {}, "oracle_sig": {}}
-    assert registry._stale_oracle_queries(snap) == {some_oracled}
-    # empty snapshot (fresh checkout): no stale set
-    assert registry._stale_oracle_queries({}) == set()
-
-    # signature is whitespace-insensitive: a reformat is not a rewrite
-    import hashlib
-
-    sql = registry._ORACLES[some_oracled]
-    reformatted = "\n   ".join(sql.split())
-    assert (
-        hashlib.md5(" ".join(reformatted.split()).encode()).hexdigest()
-        == sigs[some_oracled]
-    )
-
-    # committed-snapshot behavior this round: the r12-rewritten /
-    # r13-fold-fixed oracles are live-stale until officially resampled
-    live = registry._stale_oracle_queries()
-    committed_seed = registry._load_snapshot().get("stale_seed", [])
-    assert set(committed_seed) <= live
-
-
-def test_update_seen_snapshot_rules():
-    """The producer side of the stale-oracle mechanism
-    (scripts/update_seen.py::build_snapshot): signatures refresh ONLY
-    when a NEW artifact samples the query; seed entries drop once
-    resampled; classes come from the last row with crash carry-over."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
-    from update_seen import build_snapshot
-
-    ok = {"rows_match": True, "schema_match": True, "hash_match": True,
-          "spark_rows": 1, "oracle_rows": 1, "err": None}
-    ro = {"rows_match": None, "schema_match": None, "hash_match": None,
-          "spark_rows": 5, "oracle_rows": None, "err": "no_oracle"}
-    crash = {"rows_match": None, "schema_match": None, "hash_match": None,
-             "spark_rows": None, "oracle_rows": None, "err": "boom"}
-
-    live = {"a": "sigA2", "b": "sigB1", "c": "sigC1"}
-
-    # Migration from a signature-less snapshot: sigs bootstrap to live,
-    # seed = bootstrap list ∩ seen, rows-only class recorded from row.
-    snap1 = build_snapshot(
-        [("r1.json", {"a": ok, "b": ro})],
-        prev={"seen": ["a", "b"], "rounds": 1},
-        live_sig=live,
-        bootstrap_stale=["a", "zz"],
-    )
-    assert snap1["stale_seed"] == ["a"]
-    assert snap1["last_class"] == {"a": "oracled", "b": "rows_only"}
-    assert snap1["oracle_sig"] == {"a": "sigA2", "b": "sigB1"}
-    assert snap1["sig_artifact"] == {"a": "r1.json", "b": "r1.json"}
-    assert snap1["last_bad"] == []
-
-    # No new artifact: signatures and seed carry verbatim, even though
-    # the live registry has moved (that skew IS the front-load signal).
-    snap2 = build_snapshot(
-        [("r1.json", {"a": ok, "b": ro})],
-        prev={**snap1, "oracle_sig": {"a": "sigA1", "b": "sigB1"}},
-        live_sig=live,
-    )
-    assert snap2["oracle_sig"]["a"] == "sigA1"  # NOT refreshed to sigA2
-    assert snap2["stale_seed"] == ["a"]
-
-    # New artifact samples a and c: a's sig refreshes to live and its
-    # seed entry drops; b (unsampled) carries; c bootstraps; a crash
-    # row keeps the previous class and flags last_bad.
-    snap3 = build_snapshot(
-        [("r1.json", {"a": ok, "b": ro}), ("r2.json", {"a": crash, "c": ok})],
-        prev={**snap2, "oracle_sig": {"a": "sigA1", "b": "sigB1"}},
-        live_sig=live,
-    )
-    assert snap3["oracle_sig"]["a"] == "sigA2"  # refreshed (new artifact)
-    assert snap3["sig_artifact"]["a"] == "r2.json"
-    assert snap3["stale_seed"] == []  # a was resampled -> seed drops
-    assert snap3["oracle_sig"]["b"] == "sigB1"
-    assert snap3["last_class"] == {
-        "a": "oracled",  # crash row -> carried from snap2
-        "b": "rows_only",
-        "c": "oracled",
-    }
-    assert snap3["last_bad"] == ["a"]

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import subprocess
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.session import CODEGEN_CACHE_ENTRIES
@@ -27,3 +30,23 @@ def test_codegen_cache_outlives_more_than_100_classes(spark):
     before = compiles.getCount()
     assert run(0) == first
     assert compiles.getCount() - before == 0
+
+
+def test_get_spark_is_the_only_session_builder():
+    """Every bench, script and test gets its session from get_spark, so
+    they all plan under the same timezone, broadcast threshold, codegen
+    cache and console settings."""
+    root = Path(__file__).resolve().parent.parent
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.split()
+    needle = "SparkSession" + ".builder"
+    builders = [p for p in tracked if needle in (root / p).read_text(encoding="utf-8")]
+    assert builders == ["mapreduce_lab_spark/session.py"]
+
+
+def test_console_progress_is_off(spark):
+    """Progress-bar lines on stdout break drivers that parse a script's
+    output; PySpark's shell launch turns the bar on unless get_spark
+    turns it off."""
+    assert spark.conf.get("spark.ui.showConsoleProgress") == "false"
