@@ -32,17 +32,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_lab_spark.operators.similarity import N_QUERIES, TOP_K, _cosine
+from mapreduce_lab_spark.functions.vectors import cosine, fold_dot, norm_sq, sq_dist, top_k
+from mapreduce_lab_spark.operators.similarity import N_QUERIES, TOP_K
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
 K_CLUSTERS = 8
 N_ITERS = 4
-
-
-def _sq_dist(va: str | Column, vb: str | Column) -> Column:
-    d = F.zip_with(va, vb, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda a, x: a + x)
 
 
 def assign_nearest(pts: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -68,7 +64,7 @@ def assign_nearest(pts: DataFrame, centroids: DataFrame) -> DataFrame:
     scored = F.transform(
         F.col("cb"),
         lambda c: F.struct(
-            _sq_dist(F.col("v"), c.getField("cv")).alias("d"),
+            sq_dist(F.col("v"), c.getField("cv")).alias("d"),
             c.getField("centroid_id").alias("centroid_id"),
         ),
     )
@@ -177,8 +173,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     _, assigned = kmeans(pts)
     base = assigned.select("vec_id", "v", "centroid_id").withColumn(
-        "norm",
-        F.aggregate(F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
+        "norm", norm_sq("v")
     ).localCheckpoint()  # train once; both join sides below reuse it
     q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -196,14 +191,9 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q)
         .join(c, "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
+        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return top_k(scored, TOP_K)
 
 
 # --- exact-integer lattice Lloyd (fully oracled iterative k-means) ----------
@@ -247,8 +237,7 @@ def _lattice_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lattice_dist(qc: str | Column, mc: str | Column) -> Column:
-    diffs = F.zip_with(qc, mc, lambda a, b: (a - b) * (a - b))
-    return F.aggregate(diffs, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return sq_dist(qc, mc, zero=F.lit(0).cast("long"))
 
 
 def _lattice_assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
@@ -437,7 +426,7 @@ def pq_assign(subvecs: DataFrame, cent: DataFrame) -> DataFrame:
     scored = F.transform(
         F.filter(F.col("cb"), lambda c: c.getField("sub") == F.col("sub")),
         lambda c: F.struct(
-            _sq_dist(F.col("sv"), c.getField("cv")).alias("d"),
+            sq_dist(F.col("sv"), c.getField("cv")).alias("d"),
             c.getField("cid").alias("cid"),
         ),
     )
@@ -531,10 +520,7 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pq_assign used during training.
     codes = pq_assign(subvecs, cent).select("vec_id", "sub", "cid").localCheckpoint()
 
-    norms = pts.withColumn(
-        "norm",
-        F.aggregate(F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-    )
+    norms = pts.withColumn("norm", norm_sq("v"))
     queries = norms.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -549,9 +535,7 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "sub",
         "cid",
-        F.aggregate(
-            F.zip_with("qsv", "cv", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        ).alias("pdot"),
+        fold_dot("qsv", "cv").alias("pdot"),
     )
     approx = (
         codes.join(F.broadcast(adc), ["sub", "cid"])
@@ -574,7 +558,7 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(queries), "query_id")
     rr = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
     return (
-        cand.withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
+        cand.withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
         .withColumn("rank", F.row_number().over(rr))
         .filter(F.col("rank") <= TOP_K)
         .select(
@@ -663,10 +647,7 @@ def q_ann_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = assign_nearest(pts, cent)
     base = assigned.select("vec_id", "v", "centroid_id").withColumn(
-        "norm",
-        F.aggregate(
-            F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        ),
+        "norm", norm_sq("v")
     ).localCheckpoint()  # assign once; both join sides below reuse it
     q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -684,16 +665,9 @@ def q_ann_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(q)
         .join(c, "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
+        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine")
-        )
-    )
+    return top_k(scored, TOP_K)
 
 
 # --- lattice PQ census (fully oracled per-subspace Lloyd) -------------------

@@ -49,6 +49,7 @@ from mapreduce_lab_spark.functions.hashing import (
 from mapreduce_lab_spark.functions.guards import guard_quadratic
 from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio
 from mapreduce_lab_spark.functions.text import tokenize
+from mapreduce_lab_spark.functions.vectors import cosine, fold_dot, norm_sq
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
@@ -892,17 +893,6 @@ def _dvec(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _fold_sum(arr: Column) -> Column:
-    # Left fold in index order — the exact same IEEE addition sequence
-    # as the oracle's list_reduce, hence bit-identical.
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def cosine(va: Column, vb: Column) -> Column:
-    dot = _fold_sum(F.zip_with(va, vb, lambda x, y: x * y))
-    return dot / F.sqrt(F.col("norm_a") * F.col("norm_b"))
-
-
 # Margin for the BLAS prefilter below: summation-order differences
 # between a BLAS dot and the left fold are bounded by ~d²·ulp ≈ 1e-12
 # relative at d = 64, so a 1e-6 margin admits every pair the fold
@@ -971,10 +961,10 @@ def gemm_margin_pairs(
 # plan plus the lambda-evaluated list materialization were the whole
 # cost of the quadratic recall-baseline oracle: 29 s -> 0.2 s at
 # sf0.1 after the rewrite (the r13 slow report's one >20 s entry).
-# The Spark side keeps its F.aggregate left fold; equality at full
-# double precision is what the pin guards. _O_DOT assumes the pair
-# sides are aliased a/b with vector column v, the convention of every
-# consumer below.
+# The Spark side keeps its F.aggregate left fold (functions/vectors.py);
+# equality at full double precision is what the pin guards. _O_DOT
+# assumes the pair sides are aliased a/b with vector column v, the
+# convention of every consumer below.
 _O_DOT = "list_dot_product(a.v, b.v)"
 _O_NORM = "list_dot_product({e}, {e})"
 
@@ -1015,7 +1005,7 @@ def q_near_dup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "near_dup_embedding_cosine",
         "operators/similarity.py ann_lsh_cosine / ann_ivf_trained",
     )
-    e = e.withColumn("norm", _fold_sum(F.zip_with("v", "v", lambda x, y: x * y)))
+    e = e.withColumn("norm", norm_sq("v"))
     # GEMM margin prefilter, then the exact fold (round-13): the n²/2
     # interpreted fold-cosines were this baseline's whole wall clock;
     # one single-group blocked Gram matrix prescreens at threshold -
@@ -1030,7 +1020,7 @@ def q_near_dup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.select(
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("norm_b")
     )
-    cos = cosine(F.col("va"), F.col("vb"))
+    cos = cosine("va", "vb", "norm_a", "norm_b")
     return (
         cand.join(a, "vec_a")
         .join(b, "vec_b")
@@ -1071,9 +1061,7 @@ def _rp_band_vals() -> list[Column]:
         v = F.lit(0)
         for r in range(RP_BAND_BITS):
             w = RP_PLANES[band * RP_BAND_BITS + r]
-            dot = _fold_sum(
-                F.zip_with("v", F.array(*[F.lit(x) for x in w]), lambda a, b: a * b)
-            )
+            dot = fold_dot("v", F.array(*[F.lit(x) for x in w]))
             v = v + F.when(dot >= 0, F.lit(1 << r)).otherwise(F.lit(0))
         vals.append(v)
     return vals
@@ -1163,7 +1151,7 @@ def q_near_dup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", _dvec("embedding").alias("v")
     )
-    base = e.withColumn("norm", _fold_sum(F.zip_with("v", "v", lambda x, y: x * y)))
+    base = e.withColumn("norm", norm_sq("v"))
     # GEMM margin prefilter per (band, val) bucket, then the exact
     # fold (round-13). The round-6 shape ran the interpreted fold-
     # cosine INSIDE the band self-join — right about never shuffling
@@ -1193,7 +1181,7 @@ def q_near_dup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(a, "vec_a")
         .join(b, "vec_b")
-        .withColumn("cos_raw", cosine(F.col("va"), F.col("vb")))
+        .withColumn("cos_raw", cosine("va", "vb", "norm_a", "norm_b"))
         .filter(F.col("cos_raw") >= COSINE_THRESHOLD)
         .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
     )

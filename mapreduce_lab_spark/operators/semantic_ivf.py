@@ -85,15 +85,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.numeric import to_units
+from mapreduce_lab_spark.functions.vectors import cosine, norm_sq, sq_dist
 from mapreduce_lab_spark.operators.clustering import pq_assign
 from mapreduce_lab_spark.operators.dedup import (
     _O_DOT,
     _O_NORM,
     COSINE_THRESHOLD,
     _dvec,
-    _fold_sum,
     connected_components,
-    cosine,
 )
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
@@ -126,16 +125,6 @@ IMI_TRAIN_ITERS = 2
 IMI_TRAIN_PER_CENT = 32
 
 
-def _sqd(va: Column, vb: Column) -> Column:
-    """Squared L2 between two array<double> columns (Column-typed twin
-    of clustering._sq_dist, which takes column names)."""
-    return F.aggregate(
-        F.zip_with(va, vb, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
 def collapse_identical_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id=min member, v, norm, members) — one row per DISTINCT
     embedding vector; members is the ascending vec_id family list."""
@@ -147,7 +136,7 @@ def collapse_identical_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("vec_id").alias("vec_id"),
             F.sort_array(F.collect_list("vec_id")).alias("members"),
         )
-        .withColumn("norm", _fold_sum(F.zip_with("v", "v", lambda x, y: x * y)))
+        .withColumn("norm", norm_sq("v"))
         .select("vec_id", "v", "norm", "members")
     )
 
@@ -281,7 +270,7 @@ def ivf_postings(
         ds = F.transform(
             F.filter(F.col("cb"), lambda c: c.getField("sub") == F.lit(s)),
             lambda c: F.struct(
-                _sqd(half, c.getField("cv")).alias("d"),
+                sq_dist(half, c.getField("cv")).alias("d"),
                 c.getField("cid").alias("cid"),
             ),
         )
@@ -699,7 +688,7 @@ def ivf_pinned_pair_table(
     pairs = (
         cand.join(va, "src")
         .join(vb, "dst")
-        .withColumn("cos_raw", cosine(F.col("va"), F.col("vb")))
+        .withColumn("cos_raw", cosine("va", "vb", "norm_a", "norm_b"))
         .filter(F.col("cos_raw") >= COSINE_THRESHOLD)
         .select("src", "dst")
         .localCheckpoint(eager=False)

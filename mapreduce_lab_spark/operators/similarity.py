@@ -6,9 +6,9 @@ nearest neighbors by cosine over ``array<float>`` embeddings.
 
 Two operators:
 
-- brute-force: broadcast the (small) query set against the full
-  corpus — O(|Q|·n·d) with NO shuffle of the corpus side; the exact
-  baseline every ANN variant is measured against;
+- brute-force: the (small) query set ships to one Arrow pass over the
+  full corpus — O(|Q|·n·d) with NO shuffle of the corpus side; the
+  exact baseline every ANN variant is measured against;
 - LSH-bucketed ANN: sign-bit bucketing (axis-aligned hyperplanes),
   neighbors searched only within the query's bucket — the scale path:
   the corpus is hash-partitioned by bucket once and each probe
@@ -17,7 +17,7 @@ Two operators:
   expressible in both engines so the oracle checks it end-to-end.
 
 All cosine arithmetic is double-precision index-ordered folds (see
-``operators/dedup.py``) so both engines produce bit-identical values;
+``functions/vectors.py``) so both engines produce bit-identical values;
 ranking ties break on vec_id, deterministically.
 """
 
@@ -28,6 +28,13 @@ from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.guards import ExactBaselineScaleError
 from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio, to_units
+from mapreduce_lab_spark.functions.vectors import (
+    cosine,
+    exact_topk,
+    norm_sq,
+    pinned_rows,
+    top_k,
+)
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
@@ -49,90 +56,7 @@ _O_FOLD = "list_dot_product({a}, {b})"
 
 def _with_norm(e: DataFrame) -> DataFrame:
     v = F.transform("embedding", lambda x: x.cast("double"))
-    df = e.select("vec_id", v.alias("v"))
-    return df.withColumn(
-        "norm", F.aggregate(F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    )
-
-
-def _cosine(va: str, vb: str, na: str, nb: str) -> Column:
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    return dot / F.sqrt(F.col(na) * F.col(nb))
-
-
-# Margin for the BLAS top-k prescreen below, same bound as
-# operators/dedup.py GEMM_MARGIN: |BLAS dot - left fold| is ~1e-12
-# relative at d = 64, far under 1e-6.
-_TOPK_GEMM_MARGIN = 1e-6
-
-
-def _gemm_topk_candidates(
-    corpus: DataFrame, q_rows: list, k: int, margin: float = _TOPK_GEMM_MARGIN
-) -> DataFrame:
-    """(query_id, neighbor_id) candidates whose BLAS cosine is within
-    ``2*margin`` of the per-batch k-th best — a provable SUPERSET of
-    each query's exact top-k (round-14, guide §4.2: the |Q|·n
-    interpreted 64-term folds were the whole cost of the exact
-    baseline; the same flops run as one Gram matrix per Arrow batch).
-
-    Losslessness: for any batch B and any candidate c in the exact
-    global top-k of its query, at most k-1 candidates anywhere beat
-    c's fold cosine, so c's fold cosine >= the k-th best fold cosine
-    within B >= (k-th best BLAS cosine within B) - margin; and c's own
-    BLAS cosine >= fold - margin >= that cut - 2*margin. Ties at the
-    boundary survive for the same reason, so the exact fold + rank
-    over the survivors emits bit-identical rows. Non-finite BLAS
-    scores (zero-norm vectors -> NaN, which Spark's DESC sort ranks
-    FIRST) are always kept so the fold decides them.
-
-    ``q_rows`` is the collected bounded query set (<= N_QUERIES rows
-    by contract — the same bounded-metadata class as the collected
-    codebook broadcasts; the corpus side never leaves the executors).
-    """
-
-    def prescreen(batches):
-        import numpy as np
-        import pandas as pd
-
-        qid = np.array([r["vec_id"] for r in q_rows], dtype="int64")
-        Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
-        qn = np.array([r["norm"] for r in q_rows], dtype=np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            Qn = Q / np.sqrt(qn)[:, None]
-        for pdf in batches:
-            if not len(pdf) or not len(qid):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                inv = 1.0 / np.sqrt(pdf["norm"].to_numpy(dtype=np.float64))
-                S = Qn @ (X * inv[:, None]).T  # |Q| x batch
-            out_q, out_n = [], []
-            for i in range(len(qid)):
-                s = S[i]
-                valid = ids != qid[i]
-                finite = np.isfinite(s)
-                sv = s[valid & finite]
-                if len(sv) > k:
-                    cut = np.partition(sv, -k)[-k] - 2 * margin
-                    keep = valid & (~finite | (s >= cut))
-                else:
-                    keep = valid
-                kept = ids[keep]
-                out_q.append(np.full(len(kept), qid[i], dtype="int64"))
-                out_n.append(kept)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                }
-            )
-
-    return corpus.select("vec_id", "v", "norm").mapInPandas(
-        prescreen, schema="query_id long, neighbor_id long"
-    )
+    return e.select("vec_id", v.alias("v")).withColumn("norm", norm_sq("v"))
 
 
 def knn_bruteforce(
@@ -150,47 +74,20 @@ def knn_bruteforce(
     max_comparisons; pass ``max_comparisons=None`` to opt in (e.g. for
     recall measurement over a sample).
 
-    Round-14 (guide §4.2, VERDICT r13 #5): the |Q|·n dot products run
-    as a BLAS Gram prescreen per Arrow batch (``_gemm_topk_candidates``
-    — a provable superset of the exact top-k, see its docstring); the
-    oracle-exact left-fold cosine then scores only the ~|Q|·k
-    survivors per batch and the (cos desc, id asc) window ranks them —
-    emitted rows bit-identical to folding every pair.
+    The |Q|·n dot products run in ``functions/vectors.exact_topk``:
+    one Arrow pass that prescreens with BLAS and emits each batch's
+    oracle-exact top-k, so Spark only ranks and rounds. One driver job
+    returns the row count for the guard and the pinned query rows.
     """
-    if max_comparisons is not None:
-        n = e.count()
-        if n * n_queries > max_comparisons:
-            raise ExactBaselineScaleError(
-                f"knn_bruteforce: {n_queries} queries x {n} corpus rows "
-                f"= {n * n_queries:.1e} comparisons exceeds "
-                f"max_comparisons={max_comparisons}. Use ann_lsh_cosine / "
-                f"ann_ivf_trained, or pass max_comparisons=None."
-            )
-    base = _with_norm(e)
-    q = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
-    )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cnorm")
-    )
-    # Bounded query-set collect (<= n_queries rows by contract) shipped
-    # to the prescreen workers via closure — the corpus side stays
-    # distributed end-to-end.
-    q_rows = [r.asDict() for r in q.collect()]
-    cand = _gemm_topk_candidates(
-        base, [{"vec_id": r["query_id"], "v": r["qv"], "norm": r["qnorm"]} for r in q_rows], k
-    )
-    # The candidate table is |Q|·k-per-batch bounded: broadcast it so
-    # the corpus side is probed scan-side and never shuffles.
-    scored = c.join(
-        F.broadcast(cand.join(q, "query_id")), "neighbor_id"
-    ).withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    n, pinned = pinned_rows(e, n_queries)
+    if max_comparisons is not None and n * n_queries > max_comparisons:
+        raise ExactBaselineScaleError(
+            f"knn_bruteforce: {n_queries} queries x {n} corpus rows "
+            f"= {n * n_queries:.1e} comparisons exceeds "
+            f"max_comparisons={max_comparisons}. Use ann_lsh_cosine / "
+            f"ann_ivf_trained, or pass max_comparisons=None."
+        )
+    return exact_topk(fan_out(e, e.sparkSession), pinned, n_queries, k)
 
 
 @query(
@@ -216,7 +113,7 @@ def knn_bruteforce(
     """,
 )
 def q_knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return knn_bruteforce(fan_out(load_table(spark, sf_dir, "embeddings"), spark))
+    return knn_bruteforce(load_table(spark, sf_dir, "embeddings"))
 
 
 def _bucket(v: Column) -> Column:
@@ -258,14 +155,9 @@ def ann_lsh(e: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFra
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
+        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return top_k(scored, k)
 
 
 @query(
@@ -299,34 +191,6 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- IVF-style partitioned ANN ---------------------------------------------
 
 N_CENTROIDS = 8
-
-
-def _sq_dist(va: str, vb: str) -> Column:
-    d = F.zip_with(va, vb, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda a, x: a + x)
-
-
-def ivf_assign(e: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each vector to its nearest centroid (squared L2, ties to
-    the smaller centroid id) — the IVF partitioning step.
-
-    Centroids broadcast (bounded, K vectors); the corpus never
-    shuffles for assignment. In production the centroids come from
-    k-means over a sample; here they are pinned seed vectors
-    (vec_id < K) so the DuckDB oracle can recompute the exact same
-    partition layout — what's verified is the IVF mechanics, not the
-    centroid training.
-    """
-    c = centroids.select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    scored = e.crossJoin(F.broadcast(c)).withColumn("d", _sq_dist("v", "cv"))
-    w = Window.partitionBy("vec_id").orderBy(F.asc("d"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "norm", "centroid_id")
-    )
 
 
 @query(
@@ -374,34 +238,17 @@ def q_ivf_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake), and each query scans ~n/K vectors instead of n. Recall is
     bounded by centroid quality; the exact baseline for measuring it
     is `knn_cosine_bruteforce`.
+
+    Centroids are pinned seed vectors (vec_id < N_CENTROIDS) so the
+    oracle can recompute the exact partition layout; what's verified is
+    the IVF mechanics, not centroid training. Assignment (squared L2,
+    ties to the smaller centroid id) and same-cell scoring run in the
+    ``exact_topk`` Arrow pass: no centroid crossJoin, no shuffle by
+    vec_id, no join.
     """
-    base = _with_norm(fan_out(load_table(spark, sf_dir, "embeddings"), spark))
-    centroids = base.filter(F.col("vec_id") < N_CENTROIDS)
-    assigned = ivf_assign(base, centroids).cache()
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        "centroid_id",
-    )
-    c = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-        "centroid_id",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    e = load_table(spark, sf_dir, "embeddings")
+    _, pinned = pinned_rows(e, max(N_QUERIES, N_CENTROIDS))
+    return exact_topk(fan_out(e, spark), pinned, N_QUERIES, TOP_K, n_cells=N_CENTROIDS)
 
 
 # --- multi-probe LSH --------------------------------------------------------
@@ -458,13 +305,8 @@ def ann_lsh_multiprobe(
         .drop("bucket")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_raw", 6).alias("cosine"))
-    )
+    scored = cand.withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
+    return top_k(scored, k)
 
 
 _O_PROBES = ", ".join(["bucket"] + [f"xor(bucket, {1 << j})" for j in range(LSH_BITS)])
@@ -522,14 +364,7 @@ def quantize_int8(e: DataFrame) -> DataFrame:
     may use it. A zero vector quantizes to zeros (guarded divides).
     """
     v = F.transform("embedding", lambda x: x.cast("double"))
-    df = e.select("vec_id", v.alias("v")).withColumn(
-        "l2",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-            )
-        ),
-    )
+    df = e.select("vec_id", v.alias("v")).withColumn("l2", F.sqrt(norm_sq("v")))
     vn = F.when(
         F.col("l2") > 0, F.transform("v", lambda x: x / F.col("l2"))
     ).otherwise(F.col("v"))
@@ -672,29 +507,14 @@ def hard_negatives(e: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> 
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("qlabel") != F.col("clabel"))
-        .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
+        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("clabel").alias("neg_label"),
-            "rank",
-            F.round("cos_raw", 6).alias("cosine"),
-        )
-    )
+    return top_k(scored, k, F.col("clabel").alias("neg_label"))
 
 
 def _with_norm_labeled(e: DataFrame) -> DataFrame:
     v = F.transform("embedding", lambda x: x.cast("double"))
-    df = e.select("vec_id", "label", v.alias("v"))
-    return df.withColumn(
-        "norm",
-        F.aggregate(F.zip_with("v", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x),
-    )
+    return e.select("vec_id", "label", v.alias("v")).withColumn("norm", norm_sq("v"))
 
 
 @query(
@@ -758,16 +578,12 @@ def ann_recall(e: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> Data
         F.col("norm").alias("cnorm"),
         "bucket",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
 
     def topk(joined: DataFrame) -> DataFrame:
-        return (
-            joined.filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("cos_raw", _cosine("qv", "cv", "qnorm", "cnorm"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id")
+        scored = joined.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+            "cos_raw", cosine("qv", "cv", "qnorm", "cnorm")
         )
+        return top_k(scored, k).select("query_id", "neighbor_id")
 
     exact = topk(F.broadcast(q).crossJoin(c))
     approx = topk(F.broadcast(q).join(c, F.col("qbucket") == F.col("bucket")))

@@ -15,6 +15,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The directory that holds this package: Python workers import the
+# daemon module (mapreduce_lab_spark/daemon.py) from it.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Generated classes kept by the JVM-wide codegen cache (Spark's static
 # default is 100); see get_spark for how the size was chosen.
 CODEGEN_CACHE_ENTRIES = 8192
@@ -51,6 +54,14 @@ def get_spark(
       ``pyspark-shell``, which turns the carriage-return progress bar
       on, and those lines break any driver that parses a script's stdout
       (bench.py's metric line came back unparsed in round 2).
+    - ``spark.python.daemon.module`` set to ``mapreduce_lab_spark.daemon``
+      on local masters, with this package's root on the workers'
+      ``PYTHONPATH``: PySpark's own daemon re-read 16 zip archives
+      (``pyspark.zip``, the Spark core jar, py4j) at the start of every
+      Python task, 118-172 ms per task on CPython < 3.13; this one
+      re-reads an archive only when it changed (see the module). Cluster
+      executors do not have this checkout's path, so they keep
+      PySpark's daemon.
 
     This is the repo's only ``SparkSession.builder``: benches, scripts
     and tests all run under these settings.
@@ -75,6 +86,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "mapreduce_lab_spark.daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

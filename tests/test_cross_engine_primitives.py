@@ -321,7 +321,8 @@ def test_spark_fold_matches_duckdb_native_dot_on_fixtures(spark, sf_dir):
     """The Spark F.aggregate left fold (the engine side of every
     cosine) vs DuckDB list_dot_product on the REAL embeddings table:
     self-dot (norm) of every vector, exact equality."""
-    from mapreduce_lab_spark.operators.dedup import _dvec, _fold_sum
+    from mapreduce_lab_spark.functions.vectors import norm_sq
+    from mapreduce_lab_spark.operators.dedup import _dvec
     from mapreduce_lab_spark.sources.tables import load_table
     from mapreduce_lab_spark.testing import duckdb_connect
 
@@ -332,7 +333,7 @@ def test_spark_fold_matches_duckdb_native_dot_on_fixtures(spark, sf_dir):
         r["vec_id"]: r["norm"]
         for r in e.select(
             "vec_id",
-            _fold_sum(F.zip_with("v", "v", lambda x, y: x * y)).alias("norm"),
+            norm_sq("v").alias("norm"),
         ).collect()
     }
     con = duckdb_connect(sf_dir)

@@ -481,12 +481,11 @@ def test_gemm_margin_prefilter_lossless(spark, sf_dir):
     discards them). Checked against an unfiltered all-pairs fold."""
     from pyspark.sql import functions as F
 
+    from mapreduce_lab_spark.functions.vectors import cosine, norm_sq
     from mapreduce_lab_spark.operators.dedup import (
         COSINE_THRESHOLD,
         GEMM_MARGIN,
         _dvec,
-        _fold_sum,
-        cosine,
         gemm_margin_pairs,
     )
     from mapreduce_lab_spark.sources.tables import load_table
@@ -494,7 +493,7 @@ def test_gemm_margin_prefilter_lossless(spark, sf_dir):
     e = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", _dvec("embedding").alias("v"))
-        .withColumn("norm", _fold_sum(F.zip_with("v", "v", lambda x, y: x * y)))
+        .withColumn("norm", norm_sq("v"))
         .localCheckpoint()
     )
     a = e.select(
@@ -508,7 +507,7 @@ def test_gemm_margin_prefilter_lossless(spark, sf_dir):
     fold_pairs = {
         (r.vec_a, r.vec_b)
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .where(cosine(F.col("va"), F.col("vb")) >= COSINE_THRESHOLD)
+        .where(cosine("va", "vb", "norm_a", "norm_b") >= COSINE_THRESHOLD)
         .collect()
     }
     gemm_pairs = {

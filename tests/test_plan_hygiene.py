@@ -94,7 +94,9 @@ BNLJ_AUDITED = {
     # vector-search baselines / bounded query sides:
     # (knn_cosine_bruteforce left this list in round 14: the GEMM
     # prescreen replaced its non-equi broadcast join with equi-joins
-    # on the bounded candidate table, so no BNLJ remains.)
+    # on the bounded candidate table, so no BNLJ remains. ivf_knn_cosine
+    # left it when centroid assignment moved into the exact_topk Arrow
+    # pass, which deleted its centroid crossJoin.)
     "ann_recall_at_5": "k-bounded query side crossed against the corpus for "
     "the exact half of the recall measurement (sampled-query eval job)",
     "trajectory_nn_recall_at_1": "k-bounded (25-row TakeOrdered) sampled "
@@ -108,7 +110,6 @@ BNLJ_AUDITED = {
     "is the per-block quadratic baseline on hash-sampled blocks (sampled "
     "eval job)",
     "ann_int8_quantized": "bounded query side vs quantized corpus",
-    "ivf_knn_cosine": "broadcast centroid table (K rows)",
     "ivf_cell_census": "1-row collected-codebook frame (2·K1 centroid "
     "structs, K1 ~ sqrt(n/64) — the broadcast IMI model artifact) plus a "
     "1-row trained-cells scalar",
