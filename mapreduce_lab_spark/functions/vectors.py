@@ -14,6 +14,12 @@ across engines (pinned in tests/test_cross_engine_primitives.py).
 - ``exact_topk`` is the top-k kernel: one ``mapInPandas`` pass that
   prescreens with BLAS and emits the oracle-exact cosine of the
   survivors, so Spark only ranks and rounds.
+- ``exact_pairs`` is the threshold kernel: one grouped
+  ``applyInPandas`` pass that prescreens each group's pairs with BLAS
+  and emits the oracle-exact cosine of the pairs that clear the
+  threshold, so Spark only rounds.
+
+Only this module multiplies matrices (tests/test_plan_hygiene.py).
 """
 
 from __future__ import annotations
@@ -34,10 +40,14 @@ try:
 except (ImportError, AttributeError):  # pragma: no cover - old pyspark
     pass
 
-# Margin of the BLAS prescreen: |BLAS dot - left fold| is ~1e-12
-# relative at d = 64, far under 1e-6 (same bound as
-# operators/dedup.py GEMM_MARGIN).
-_TOPK_GEMM_MARGIN = 1e-6
+# Margin of every BLAS prescreen: |BLAS cosine - fold cosine| is
+# ~1e-12 relative at d = 64, far under 1e-6, so a prescreen at the
+# cut minus this margin drops no pair the fold would keep.
+_GEMM_MARGIN = 1e-6
+# Rows per BLAS block in ``exact_pairs``: bounds the scored slab at
+# _GEMM_BLOCK x group-size float64s (a 5k-row hot cell scores in
+# 43 MB slabs instead of one 220 MB matrix).
+_GEMM_BLOCK = 1024
 
 
 def _fold(terms: Column, zero: Column) -> Column:
@@ -134,7 +144,7 @@ def exact_topk(
     One ``mapInPandas`` pass; per Arrow batch and query:
 
     1. BLAS prescreen: keep the candidates whose BLAS cosine is within
-       ``2 * _TOPK_GEMM_MARGIN`` of the batch's k-th best, plus every
+       ``2 * _GEMM_MARGIN`` of the batch's k-th best, plus every
        non-finite score (zero norms). Lossless: a row in the batch's
        exact top-k has a fold cosine >= the k-th best fold >= the k-th
        best BLAS - the margin, so its own BLAS cosine clears the cut.
@@ -190,7 +200,7 @@ def exact_topk(
                 finite = np.isfinite(s)
                 sv = s[keep & finite]
                 if len(sv) > k:
-                    cut = np.partition(sv, -k)[-k] - 2 * _TOPK_GEMM_MARGIN
+                    cut = np.partition(sv, -k)[-k] - 2 * _GEMM_MARGIN
                     keep &= ~finite | (s >= cut)
                 idx = np.flatnonzero(keep)
                 den = np.sqrt(qn[i] * cn[idx])
@@ -216,3 +226,63 @@ def exact_topk(
         topk, schema="query_id long, neighbor_id long, cos_raw double"
     )
     return top_k(scored, k)
+
+
+def exact_pairs(vecs: DataFrame, group_cols: list[str], threshold: float) -> DataFrame:
+    """Every pair of ``vecs`` (vec_id, v, *group_cols) that shares a
+    group and whose oracle-exact cosine is >= ``threshold``, as
+    (vec_a < vec_b, cos_raw). ``v`` is the double-cast embedding; no
+    ``group_cols`` makes the whole frame one group.
+
+    One grouped ``applyInPandas`` pass; per group:
+
+    1. BLAS prescreen of the upper triangle in ``_GEMM_BLOCK``-row
+       slabs at ``threshold - _GEMM_MARGIN``. A zero-norm vector
+       scores NaN, which never passes, as the oracle's NULL cosine
+       never does.
+    2. ``np_fold_dot / sqrt(norm_a * norm_b)`` on the survivors, with
+       the norms folded in the kernel: bit for bit the Spark
+       ``cosine``, folded in chunks no larger than the slab.
+    3. Keep the pairs with ``cos_raw >= threshold``.
+
+    A pair that shares k groups is emitted k times, with the same
+    ``cos_raw``; callers that need a set take ``distinct``.
+    """
+
+    def pairs(pdf):
+        import pandas as pd
+
+        ids = pdf["vec_id"].to_numpy()
+        out_a, out_b, out_cos = [ids[:0]], [ids[:0]], [np.zeros(0)]
+        if len(ids) >= 2:
+            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            norm = np_fold_dot(X, X)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                Xn = X / np.sqrt(norm)[:, None]
+            for s in range(0, len(ids), _GEMM_BLOCK):
+                S = Xn[s : s + _GEMM_BLOCK] @ Xn[s:].T  # block x (rows >= s)
+                bi, cj = np.nonzero(S >= threshold - _GEMM_MARGIN)
+                upper = cj > bi
+                i, j = bi[upper] + s, cj[upper] + s
+                step = max(1, S.size // max(1, X.shape[1]))
+                for c in range(0, len(i), step):
+                    ic, jc = i[c : c + step], j[c : c + step]
+                    cos = np_fold_dot(X[ic], X[jc]) / np.sqrt(norm[ic] * norm[jc])
+                    ok = cos >= threshold
+                    a, b = ids[ic[ok]], ids[jc[ok]]
+                    out_a.append(np.minimum(a, b))
+                    out_b.append(np.maximum(a, b))
+                    out_cos.append(cos[ok])
+        return pd.DataFrame(
+            {
+                "vec_a": np.concatenate(out_a),
+                "vec_b": np.concatenate(out_b),
+                "cos_raw": np.concatenate(out_cos),
+            }
+        )
+
+    return (
+        vecs.select("vec_id", "v", *group_cols)
+        .groupBy(*group_cols)
+        .applyInPandas(pairs, schema="vec_a long, vec_b long, cos_raw double")
+    )

@@ -49,7 +49,7 @@ from mapreduce_lab_spark.functions.hashing import (
 from mapreduce_lab_spark.functions.guards import guard_quadratic
 from mapreduce_lab_spark.functions.numeric import exact_ratio, oracle_exact_ratio
 from mapreduce_lab_spark.functions.text import tokenize
-from mapreduce_lab_spark.functions.vectors import cosine, fold_dot, norm_sq
+from mapreduce_lab_spark.functions.vectors import exact_pairs, fold_dot
 from mapreduce_lab_spark.registry import query
 from mapreduce_lab_spark.sources.tables import fan_out, load_table
 
@@ -893,66 +893,6 @@ def _dvec(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-# Margin for the BLAS prefilter below: summation-order differences
-# between a BLAS dot and the left fold are bounded by ~d²·ulp ≈ 1e-12
-# relative at d = 64, so a 1e-6 margin admits every pair the fold
-# could accept — the prefilter has no false negatives by construction
-# (same bound the pinned-IVF lane uses, semantic_ivf.py).
-GEMM_MARGIN = 1e-6
-
-
-def gemm_margin_pairs(
-    vecs: DataFrame, group_cols: list[str], threshold: float
-) -> DataFrame:
-    """Distinct (vec_a < vec_b) id pairs whose BLAS cosine clears
-    ``threshold`` within at least one group of ``group_cols``.
-
-    The PREFILTER half of the round-13 verify split: grouped
-    ``applyInPandas`` ships each bucket's vectors once and scores all
-    in-bucket pairs as a blocked Gram matrix (guide §4.2 — bulk work
-    in vectorized native code, not per-pair interpreted folds). The
-    caller re-verifies survivors with the oracle-exact left-fold
-    ``cosine`` at the REAL threshold, so callers' emitted sets are
-    bit-identical to folding every candidate; call with
-    ``threshold - GEMM_MARGIN`` to make the prescreen lossless.
-    ``vecs`` must carry (vec_id, v, norm) plus the group columns.
-    """
-    thr = threshold
-
-    def verify(pdf):
-        import numpy as np
-        import pandas as pd
-
-        ids = pdf["vec_id"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
-        X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        inv = 1.0 / np.sqrt(pdf["norm"].to_numpy(dtype=np.float64))
-        Xn = X * inv[:, None]
-        out_a, out_b = [], []
-        for s in range(0, len(ids), 1024):
-            blk = Xn[s : s + 1024]
-            S = blk @ Xn.T  # block x all
-            bi, cj = np.nonzero(S >= thr)
-            gi = bi + s
-            keep = cj > gi  # strict upper triangle in global indices
-            a, b = ids[gi[keep]], ids[cj[keep]]
-            out_a.append(np.minimum(a, b))
-            out_b.append(np.maximum(a, b))
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else np.array([], dtype="int64"),
-                "vec_b": np.concatenate(out_b) if out_b else np.array([], dtype="int64"),
-            }
-        )
-
-    return (
-        vecs.groupBy(*group_cols)
-        .applyInPandas(verify, schema="vec_a long, vec_b long")
-        .distinct()
-    )
-
-
 # Native list_dot_product, not the round-5 LATERAL-wrapped
 # list_reduce([..*..]) comprehension fold: on this DuckDB build the
 # two are BIT-IDENTICAL (sequential scalar accumulation — verified
@@ -993,8 +933,8 @@ def q_near_dup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     real operators, and this one exists to measure their recall on
     samples. A guard_quadratic row bound (EXACT_COSINE_MAX_ROWS,
     opt-out with max_rows=None) refuses inputs where the pair count
-    would be catastrophic. Norms are computed once per row before the
-    join (O(n·d)), so the pair stage only pays the dot product.
+    would be catastrophic. The kernel folds each norm once per row
+    (O(n·d)), so the pair stage only pays the dot product.
     """
     e = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", _dvec("embedding").alias("v")
@@ -1005,28 +945,11 @@ def q_near_dup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "near_dup_embedding_cosine",
         "operators/similarity.py ann_lsh_cosine / ann_ivf_trained",
     )
-    e = e.withColumn("norm", norm_sq("v"))
-    # GEMM margin prefilter, then the exact fold (round-13): the n²/2
-    # interpreted fold-cosines were this baseline's whole wall clock;
-    # one single-group blocked Gram matrix prescreens at threshold -
-    # GEMM_MARGIN (lossless — see gemm_margin_pairs) and the oracle-
-    # parity fold decides only the survivors, bit-identically.
-    cand = gemm_margin_pairs(
-        e.withColumn("g", F.lit(0)), ["g"], COSINE_THRESHOLD - GEMM_MARGIN
-    )
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("norm_a")
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("norm_b")
-    )
-    cos = cosine("va", "vb", "norm_a", "norm_b")
-    return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .withColumn("cos_raw", cos)
-        .filter(F.col("cos_raw") >= COSINE_THRESHOLD)
-        .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
+    # One kernel pass (functions/vectors.exact_pairs): BLAS prescreens
+    # the n²/2 pairs and the oracle-exact fold scores the survivors,
+    # so no interpreted fold and no join runs in Spark.
+    return exact_pairs(e, [], COSINE_THRESHOLD).select(
+        "vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine")
     )
 
 
@@ -1151,38 +1074,17 @@ def q_near_dup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = fan_out(load_table(spark, sf_dir, "embeddings"), spark).select(
         "vec_id", _dvec("embedding").alias("v")
     )
-    base = e.withColumn("norm", norm_sq("v"))
-    # GEMM margin prefilter per (band, val) bucket, then the exact
-    # fold (round-13). The round-6 shape ran the interpreted fold-
-    # cosine INSIDE the band self-join — right about never shuffling
-    # the collision set (each bucket holds ~n/16 rows on this
-    # constant-bucket scheme, so collisions are ~n²/64 with up-to-4x
-    # band duplication), wrong about the verify engine: every
-    # collision paid a 64-term interpreted fold. The grouped Gram
-    # matrix (gemm_margin_pairs) scores each bucket's pairs in BLAS —
-    # the bucket's vectors cross the Python boundary ONCE, pairs never
-    # shuffle — and only the ~survivor set (margin threshold -
-    # GEMM_MARGIN, lossless) reaches the oracle-parity fold + real
-    # threshold, so the emitted pair set is bit-identical to folding
-    # every collision.
-    bands = base.select(
-        "vec_id", "v", "norm",
-        F.posexplode(F.array(*_rp_band_vals())).alias("band", "val"),
-    )
-    cand = gemm_margin_pairs(bands, ["band", "val"], COSINE_THRESHOLD - GEMM_MARGIN)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("norm_b"),
+    # Each (band, val) bucket holds ~n/16 rows on this constant-bucket
+    # scheme, so collisions are ~n²/64: exact_pairs scores a bucket in
+    # one grouped pass (its vectors cross the Python boundary once and
+    # collision pairs never shuffle), and the distinct drops the pairs
+    # that collide in more than one band.
+    bands = e.select(
+        "vec_id", "v", F.posexplode(F.array(*_rp_band_vals())).alias("band", "val")
     )
     return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .withColumn("cos_raw", cosine("va", "vb", "norm_a", "norm_b"))
-        .filter(F.col("cos_raw") >= COSINE_THRESHOLD)
+        exact_pairs(bands, ["band", "val"], COSINE_THRESHOLD)
+        .distinct()
         .select("vec_a", "vec_b", F.round("cos_raw", 6).alias("cosine"))
     )
 

@@ -35,11 +35,12 @@ Index construction — an inverted multi-index (Babenko & Lempitsky,
    set per rep: the IVF_NPROBE product cells with smallest combined
    half-distance among the IMI_PROBE_RANK² rank pairs — the
    multi-sequence probe order, truncated to a fixed budget.
-4. **Pair-find inside cells, verified per cell as a blocked Gram
-   matrix** (grouped ``applyInPandas``: Arrow ships postings once,
-   BLAS scores X @ X.T in bounded slabs), feed the verified pairs to
-   the shared alternating-star ``connected_components``, then expand
-   member lists.
+4. **Pair-find inside cells, verified per cell by the exact
+   threshold kernel** (``functions/vectors.exact_pairs``: Arrow ships
+   postings once, BLAS prescreens each cell in bounded slabs and the
+   oracle-exact fold decides), feed the verified pairs to the shared
+   alternating-star ``connected_components``, then expand member
+   lists.
 
 Scale contract, and how it differs from the census-gated LSH lane:
 product cells number K1² ≈ n / C, so expected occupancy stays
@@ -85,7 +86,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.numeric import to_units
-from mapreduce_lab_spark.functions.vectors import cosine, norm_sq, sq_dist
+from mapreduce_lab_spark.functions.vectors import exact_pairs, sq_dist
 from mapreduce_lab_spark.operators.clustering import pq_assign
 from mapreduce_lab_spark.operators.dedup import (
     _O_DOT,
@@ -126,7 +127,7 @@ IMI_TRAIN_PER_CENT = 32
 
 
 def collapse_identical_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id=min member, v, norm, members) — one row per DISTINCT
+    """(vec_id=min member, v, members) — one row per DISTINCT
     embedding vector; members is the ascending vec_id family list."""
     e = fan_out(load_table(spark, sf_dir, "embeddings"), spark)
     pts = e.select("vec_id", _dvec("embedding").alias("v"))
@@ -136,8 +137,7 @@ def collapse_identical_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("vec_id").alias("vec_id"),
             F.sort_array(F.collect_list("vec_id")).alias("members"),
         )
-        .withColumn("norm", norm_sq("v"))
-        .select("vec_id", "v", "norm", "members")
+        .select("vec_id", "v", "members")
     )
 
 
@@ -245,7 +245,7 @@ def build_ivf_index(
 def ivf_postings(
     reps: DataFrame, cent: DataFrame, dim: int, nprobe: int | None = None
 ) -> DataFrame:
-    """(vec_id, v, norm, c1, c2): each rep in its IVF_NPROBE probe
+    """(vec_id, v, c1, c2): each rep in its IVF_NPROBE probe
     cells — the product cells with the smallest COMBINED half-space
     distance d1 + d2 among the top-IMI_PROBE_RANK candidates per half
     (the multi-sequence probe order of the inverted multi-index,
@@ -296,15 +296,9 @@ def ivf_postings(
     cells = F.slice(F.array_sort(combos), 1, nprobe)
     return (
         reps.crossJoin(F.broadcast(cb))
-        .select("vec_id", "v", "norm", F.explode(cells).alias("cell"))
-        .select("vec_id", "v", "norm", F.col("cell.c1").alias("c1"), F.col("cell.c2").alias("c2"))
+        .select("vec_id", "v", F.explode(cells).alias("cell"))
+        .select("vec_id", "v", F.col("cell.c1").alias("c1"), F.col("cell.c2").alias("c2"))
     )
-
-
-# rows per GEMM block inside a cell: bounds the scored slab at
-# GEMM_BLOCK x max_cell float64s (a 5k-row hot cell scores in 43 MB
-# slabs instead of one 220 MB matrix).
-GEMM_BLOCK = 1024
 
 
 def ivf_verified_pairs(
@@ -313,66 +307,19 @@ def ivf_verified_pairs(
     dim: int,
     threshold: float = COSINE_THRESHOLD,
     nprobe: int | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
-    """Rep-level (vec_a < vec_b) pairs with exact cosine >=
-    COSINE_THRESHOLD, verified per cell as a blocked Gram matrix.
+    """Rep-level (vec_a < vec_b, cos_raw) pairs with oracle-exact
+    cosine >= ``threshold``, verified per (c1, c2) cell by
+    ``exact_pairs``.
 
-    The verify is grouped ``applyInPandas`` over (c1, c2): Arrow ships
-    each cell's POSTINGS (n·d floats) once and BLAS scores all
-    in-cell pairs as X @ X.T in GEMM blocks — the production shape
-    for dense vector verify. The first cut expressed the same dots as
-    per-pair higher-order expressions inside the cell self-join;
-    correct, but HOF folds are interpreted (outside whole-stage
-    codegen), and at sf10's measured 453M candidates that verify was
-    the whole wall clock (>10 min local); the GEMM form moves the
-    same flops into vectorized BLAS and ships ~1000x less data than a
-    pair join would (postings, not candidate pairs). A pair caught by
-    k probe cells is emitted k times and collapsed by the distinct —
-    redundant BLAS flops are far cheaper than deduping pre-verify.
-
-    Numeric note: this query is rows-only at the driver (trained
-    index), so the verify needs no cross-engine IEEE parity — BLAS
-    accumulation order may differ from the oracle-exact left fold the
-    ORACLED exact baseline uses; a pair whose true cosine sits within
-    float ulps of the threshold could differ, which the recall tests
-    tolerate by construction (floors, not equality).
+    Arrow ships each cell's POSTINGS (n·d floats) once, ~1000x less
+    data than a candidate-pair join at sf10's 453M candidates, and
+    per-pair interpreted folds there took the whole wall clock (>10 min
+    local; docs/SCALE.md round 9b). A pair caught by k probe cells is
+    emitted k times: both consumers feed ``connected_components``,
+    whose own distinct collapses them.
     """
-    p = ivf_postings(reps, cent, dim, nprobe=nprobe)
-    thr = threshold
-
-    def verify(pdf):
-        import numpy as np
-        import pandas as pd
-
-        ids = pdf["vec_id"].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": []}).astype("int64")
-        X = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        inv = 1.0 / np.sqrt(pdf["norm"].to_numpy(dtype=np.float64))
-        Xn = X * inv[:, None]
-        out_a, out_b = [], []
-        for s in range(0, len(ids), GEMM_BLOCK):
-            blk = Xn[s : s + GEMM_BLOCK]
-            S = blk @ Xn.T  # block x all
-            bi, cj = np.nonzero(S >= thr)
-            gi = bi + s
-            keep = cj > gi  # strict upper triangle in global indices
-            a, b = ids[gi[keep]], ids[cj[keep]]
-            out_a.append(np.minimum(a, b))
-            out_b.append(np.maximum(a, b))
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else np.array([], dtype="int64"),
-                "vec_b": np.concatenate(out_b) if out_b else np.array([], dtype="int64"),
-            }
-        )
-
-    out = p.groupBy("c1", "c2").applyInPandas(verify, schema="vec_a long, vec_b long")
-    # dedup=False lets a consumer that dedups anyway (the CC input
-    # runs its own distinct over the symmetrized edges) skip one full
-    # shuffle of the pair table — round 14; emitted SET unchanged.
-    return out.distinct() if dedup else out
+    return exact_pairs(ivf_postings(reps, cent, dim, nprobe=nprobe), ["c1", "c2"], threshold)
 
 
 @query(
@@ -405,10 +352,7 @@ def q_near_dup_embedding_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataF
     member, so labels are min-over-members in every case).
     """
     reps, cent, dim = build_ivf_index(spark, sf_dir)
-    # dedup=False: connected_components runs distinct() on the
-    # symmetrized edge set itself, so the pre-CC distinct was a
-    # redundant extra shuffle of the pair table (round 14).
-    pairs = ivf_verified_pairs(reps, cent, dim, dedup=False).select(
+    pairs = ivf_verified_pairs(reps, cent, dim).select(
         F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
     )
     labels = connected_components(pairs).withColumnRenamed("doc_id", "rep")
@@ -478,15 +422,13 @@ def q_ivf_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flagship runs except the avg-update loop now sits behind the
 # rows+schema+hash gate (VERDICT r9 task #1).
 #
-# The DECIDING verify here is the in-join left-fold cosine (the dedup
-# lane's `cosine`) rather than the GEMM kernel: the fold's IEEE
-# addition sequence is what the oracle can replay bit-for-bit. The
-# GEMM kernel runs first only as a margin PREFILTER (threshold - 1e-6,
-# round 13): BLAS and the fold agree to ~1e-12 relative, so the margin
-# admits every pair the fold could accept and the fold then decides
-# membership exactly — bit-identical output, ~1000x fewer interpreted
-# fold evaluations. The GEMM kernel's own semantics stay pinned by
-# tests/test_semantic_ivf.py's subset-of-exact + recall floors.
+# The DECIDING verify is the left-fold cosine inside the exact_pairs
+# kernel: the fold's IEEE addition sequence is what the oracle replays
+# bit-for-bit. BLAS runs first in the same pass only as a margin
+# prescreen (threshold - 1e-6): BLAS and the fold agree to ~1e-12
+# relative, so the margin admits every pair the fold could accept and
+# the fold then decides membership exactly, with no second scan or
+# join (tests/test_vectors.py pins the kernel against the Spark fold).
 
 _CC_ROUNDS = 12  # label distance doubles per round: covers diameter 4096
 
@@ -655,42 +597,13 @@ def ivf_pinned_pair_table(
     dim = int(row["d"]) if row["d"] is not None else 2
     k1 = max(2, math.ceil(math.sqrt(max(n, 1) / IMI_TARGET_CELL)))
     cent = init_codebooks(_half_subvectors(_train_sample(reps, n, k1), dim), k1)
-    # GEMM margin prefilter, then the exact fold (round-13): the
-    # oracled contract needs the left-fold IEEE cosine per pair, which
-    # is interpreted and was the wall clock — the pinned init's K1²
-    # cells are unbalanced enough that sf0.1 enumerated 1.41M distinct
-    # candidates for 838 true pairs. The BLAS Gram-matrix kernel
-    # (ivf_verified_pairs) scores all in-cell pairs vectorized at
-    # threshold - 1e-6; summation-order differences between BLAS and
-    # the left fold are bounded by ~dim²·ulp ≈ 1e-12 relative, so no
-    # pair whose FOLD cosine passes the threshold can fall below the
-    # margin — the prefilter has no false negatives by construction.
-    # The exact fold + threshold then runs on only the ~survivor set
-    # (and discards any margin-only extras), so the emitted pair set
-    # is BIT-IDENTICAL to folding every candidate (sf0.1: 1.41M fold
-    # evaluations + a 1.41M-row distinct -> 838-ish folds; warm 6.0 ->
-    # ~3 s, DuckDB hash gate re-verified at sf0.01 + sf0.1).
-    cand = ivf_verified_pairs(
-        reps, cent, dim, threshold=COSINE_THRESHOLD - 1e-6
-    ).select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-    va = reps.select(
-        F.col("vec_id").alias("src"), F.col("v").alias("va"),
-        F.col("norm").alias("norm_a"),
-    )
-    vb = reps.select(
-        F.col("vec_id").alias("dst"), F.col("v").alias("vb"),
-        F.col("norm").alias("norm_b"),
-    )
-    # Lazy: the single-consumer path (connected_components, which
-    # materializes its own checkpoint of the symmetrized edges) no
-    # longer pays a separate blocking job here, while any multi-pass
-    # consumer still reads materialized blocks after the first action.
+    # Lazy: the single consumer (connected_components, which
+    # materializes its own checkpoint of the symmetrized edges) pays no
+    # separate blocking job here, while any multi-pass consumer still
+    # reads materialized blocks after the first action.
     pairs = (
-        cand.join(va, "src")
-        .join(vb, "dst")
-        .withColumn("cos_raw", cosine("va", "vb", "norm_a", "norm_b"))
-        .filter(F.col("cos_raw") >= COSINE_THRESHOLD)
-        .select("src", "dst")
+        ivf_verified_pairs(reps, cent, dim)
+        .select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
         .localCheckpoint(eager=False)
     )
     return reps, pairs
@@ -719,10 +632,9 @@ def q_near_dup_embedding_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFra
     path for everything except training: ``collapse_identical_vectors``
     -> ``init_codebooks`` over the ``_train_sample`` stride ->
     ``ivf_postings`` (broadcast-codebook assignment + truncated
-    multi-sequence probe order) -> distinct in-cell candidates, each
-    verified once with the left-fold IEEE ``cosine`` -> shared
-    alternating-star
-    ``connected_components`` -> member expansion. The DuckDB twin
+    multi-sequence probe order) -> in-cell pairs scored by
+    ``exact_pairs`` with the left-fold IEEE cosine -> shared
+    alternating-star ``connected_components`` -> member expansion. The DuckDB twin
     replays every step (see _IVF_PINNED_ORACLE commentary), so the
     whole chain carries the rows+schema+hash gate; only the iterative
     avg-update loop remains rows-only (in the trained flagship).
@@ -961,7 +873,7 @@ def q_ivf_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         reps_full.crossJoin(F.broadcast(kf))
         .where(F.col("vec_id") <= F.col("kk"))
-        .select("vec_id", "v", "norm")
+        .select("vec_id", "v")
         .localCheckpoint(eager=False)
     )
     # Fused count/dim sizing job (round 14); order-independent dim

@@ -473,53 +473,6 @@ def test_incremental_collapse_matches_uncollapsed_with_dup_family(spark):
     assert {(c, n, 1.0) for c in (1, 2) for n in (10, 20)} <= got
 
 
-def test_gemm_margin_prefilter_lossless(spark, sf_dir):
-    """The round-13 BLAS prescreen (gemm_margin_pairs at threshold -
-    GEMM_MARGIN) must admit EVERY pair whose oracle-exact left-fold
-    cosine clears the real threshold — a missed pair would silently
-    change query results; margin-only extras are fine (the fold
-    discards them). Checked against an unfiltered all-pairs fold."""
-    from pyspark.sql import functions as F
-
-    from mapreduce_lab_spark.functions.vectors import cosine, norm_sq
-    from mapreduce_lab_spark.operators.dedup import (
-        COSINE_THRESHOLD,
-        GEMM_MARGIN,
-        _dvec,
-        gemm_margin_pairs,
-    )
-    from mapreduce_lab_spark.sources.tables import load_table
-
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _dvec("embedding").alias("v"))
-        .withColumn("norm", norm_sq("v"))
-        .localCheckpoint()
-    )
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("norm").alias("norm_b"),
-    )
-    fold_pairs = {
-        (r.vec_a, r.vec_b)
-        for r in a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .where(cosine("va", "vb", "norm_a", "norm_b") >= COSINE_THRESHOLD)
-        .collect()
-    }
-    gemm_pairs = {
-        (r.vec_a, r.vec_b)
-        for r in gemm_margin_pairs(
-            e.withColumn("g", F.lit(0)), ["g"], COSINE_THRESHOLD - GEMM_MARGIN
-        ).collect()
-    }
-    assert fold_pairs, "fixture has no near-dup pairs; test is vacuous"
-    assert fold_pairs <= gemm_pairs, sorted(fold_pairs - gemm_pairs)[:5]
-
-
 def test_embedding_lsh_subset_of_exact_with_usable_recall(spark, sf_dir):
     """The banded random-hyperplane path must emit a SUBSET of the
     exact O(n²) baseline's pairs (the final cosine verify guarantees

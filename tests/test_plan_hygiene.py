@@ -22,6 +22,9 @@ stream to drain it, and their batch twins are swept instead).
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from mapreduce_lab_spark import registry
@@ -503,3 +506,42 @@ def test_round_cast_detector():
     assert _round_casts("cast(round(x#1, 0) as int)") == ["cast(round(x#1, 0) as int)"]
     # rounding to decimals, or a round that is not cast, is not units
     assert _round_casts("cast(round(x#1, 2) as bigint), round((y#2 * 100.0), 0)") == []
+
+
+# One vector-math module: functions/vectors.py is the only file under
+# the package that multiplies matrices. Any other ``@`` is listed here
+# as (path, source) -> why it is not a vector kernel.
+PKG = Path(__file__).resolve().parent.parent / "mapreduce_lab_spark"
+MATMUL_AUDITED = {
+    ("operators/linalg.py", "X.T @ X"): "embedding_covariance and its "
+    "twin: the exact int64 Gram of one Arrow batch of fixed-point units, "
+    "a second moment, not a vector score",
+}
+
+
+def _matmuls() -> list[tuple[str, int, str]]:
+    """(path, line, source) of every ``@`` / ``@=`` in the package
+    outside functions/vectors.py."""
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/vectors.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.BinOp, ast.AugAssign)) and isinstance(node.op, ast.MatMult):
+                hits.append((rel, node.lineno, ast.unparse(node)))
+    return hits
+
+
+def test_only_the_vectors_module_multiplies_matrices():
+    offenders = [h for h in _matmuls() if (h[0], h[2]) not in MATMUL_AUDITED]
+    assert offenders == [], (
+        f"matrix products outside functions/vectors.py: {offenders}; score "
+        "vectors with exact_topk / exact_pairs, or audit here with a reason"
+    )
+
+
+def test_matmul_audit_list_not_stale():
+    seen = {(rel, src) for rel, _, src in _matmuls()}
+    stale = [k for k in MATMUL_AUDITED if k not in seen]
+    assert stale == [], f"MATMUL_AUDITED entries no longer needed: {stale}"

@@ -40,9 +40,10 @@ def _write_embeddings(path: str, rows: list[tuple[int, list[float]]]) -> None:
 
 def test_ivf_pairs_subset_of_exact_with_recall_floor(spark, sf_dir):
     """Rep-level verified pairs must be a SUBSET of the exact O(n²)
-    baseline (the in-join cosine verify guarantees precision 1.0) and
-    recover most of it (measured 1.0 at sf0.001 with C=64/nprobe=6;
-    floor 0.9 for corpus robustness)."""
+    baseline (both are decided by the same exact_pairs fold, so
+    precision is 1.0 by construction) and recover most of it (measured
+    1.0 at sf0.001 with C=64/nprobe=6; floor 0.9 for corpus
+    robustness)."""
     exact = {
         (r.vec_a, r.vec_b)
         for r in q_near_dup_embedding_cosine(spark, sf_dir).collect()
