@@ -1,5 +1,9 @@
-"""Distributed k-means (Lloyd's) over the embeddings table, and the
-trained-centroid IVF ANN built on top of it.
+"""Lloyd's k-means over the embeddings table: ONE round shared by
+every trainer in the engine — the float and exact-integer censuses
+(``kmeans``), the per-subspace product-quantization codebooks
+(``pq_train``) and the half-space IVF codebooks
+(``semantic_ivf.train_codebooks``) — plus the trained-centroid IVF ANN
+built on top of it.
 
 ABSENT from the reference (it has no iterative dataflow at all — one
 map→barrier→reduce pass, ``core/coordinator.go:317-324``). This is
@@ -9,16 +13,30 @@ declarative rounds where each round is pure DataFrame ops —
 Catalyst plans every round, nothing is computed driver-side except
 the loop condition.
 
-Scale shape per round:
+Column contract (``keys`` is ``()``, or ``("sub",)`` for per-subspace
+codebooks trained jointly):
 
-- assignment: corpus ⋈ broadcast(centroids) — K centroid vectors
-  broadcast to every executor, the corpus NEVER shuffles;
-- update: posexplode to (centroid, dim) pairs → partial+final avg
-  (map-side combine carries K·d partial sums, not n·d rows) →
+- points ``(vec_id, *keys, v)``;
+- codebooks ``(*keys, cid, cv)``;
+- an assignment ``(vec_id, *keys, v, cid, d)``.
+
+Scale shape per ``lloyd`` round:
+
+- ``nearest_centroid``: the codebook collapses to ONE broadcast row
+  and each point running-min folds over its own key group's entries —
+  the corpus NEVER shuffles;
+- ``centroid_means``: posexplode to (cid, dim) pairs → partial+final
+  mean (map-side combine carries K·d partial sums, not n·d rows) →
   re-assemble arrays with an array_sort(collect_list(struct)) whose
   group size is exactly d — bounded, so the holistic collect is safe;
-- ``localCheckpoint()`` truncates lineage so the plan stays O(1)
+- a lazy ``localCheckpoint`` truncates lineage so the plan stays O(1)
   across rounds instead of doubling.
+
+The element type of ``v`` picks the arithmetic. Double vectors get
+double distances and ``avg`` (the rows-only float lanes: avg() sums
+in partition order, so no SQL twin can be hash-exact); integral
+vectors get exact int64 distances and the floor mean
+``div(sum, count)`` (the hash-gated lattice lanes below).
 
 The kmeans query is registered rows-only (no oracle_sql): an
 iterative fixpoint is the documented non-SQL-expressible case, and
@@ -29,8 +47,12 @@ brute-force baseline that IS oracle-checked).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import operator
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from mapreduce_lab_spark.functions.vectors import cosine, fold_dot, norm_sq, sq_dist, top_k
 from mapreduce_lab_spark.operators.similarity import N_QUERIES, TOP_K
@@ -41,69 +63,93 @@ K_CLUSTERS = 8
 N_ITERS = 4
 
 
-def assign_nearest(pts: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid per point (squared L2, ties to smaller id).
+def _integral(df: DataFrame) -> bool:
+    return isinstance(df.schema["v"].dataType.elementType, IntegralType)
 
-    pts: (vec_id, v); centroids: (centroid_id, cv).
-    Returns (vec_id, v, centroid_id, d).
-    """
-    # Collected-codebook argmin (round-13, guide §2.4): the K
-    # centroids collapse to ONE row (collect_list of structs)
-    # broadcast against the corpus; per-row argmin is a transform
-    # (each distance computed exactly once) followed by a running-min
-    # fold over the K (d, centroid_id) structs — the same (asc d,
-    # asc id) tie-break as the previous min(struct) groupBy, but with
-    # NO exchange at all: assignment is pure scan-side work. The
-    # round-12 shape (crossJoin to K rows + min(struct) groupBy) paid
-    # a full-corpus Sort + SortAggregate + Exchange(vec_id) per round
-    # because struct-min cannot hash-aggregate. A fold, not
-    # array_sort: the measured sf0.1 sweep (docs/SCALE.md r13) has
-    # the O(K) fold beating the O(K log K) sort-of-structs per row.
-    # Same pattern as semantic_ivf.ivf_postings' broadcast artifact.
-    cb = centroids.agg(F.collect_list(F.struct("centroid_id", "cv")).alias("cb"))
+
+def _seeds(pts: DataFrame, k: int, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Deterministic init: per key group, the points with vec_id < k,
+    so every run — and the recall tests against the exact baseline —
+    sees the same fixpoint. Production init would be k-means|| over a
+    sample; the rounds are identical."""
+    return pts.filter(F.col("vec_id") < k).select(
+        *keys, F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+
+
+def nearest_centroid(
+    pts: DataFrame, cent: DataFrame, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Nearest centroid of each point among its own key group's
+    entries (squared L2, ties to the smaller cid). Returns
+    (vec_id, *keys, v, cid, d); a point whose group has no centroid
+    gives no row."""
+    # Collected-codebook argmin (round-13, guide §2.4): the codebook
+    # collapses to ONE row (collect_list of structs) broadcast against
+    # the corpus; per-row argmin is a transform (each distance
+    # computed exactly once) followed by a running-min fold over the
+    # (d, cid) structs — NO exchange at all: assignment is pure
+    # scan-side work. The round-12 shape (crossJoin to K rows +
+    # min(struct) groupBy) paid a full-corpus Sort + SortAggregate +
+    # Exchange per round because struct-min cannot hash-aggregate. A
+    # fold, not array_sort: the measured sf0.1 sweep (docs/SCALE.md
+    # r13) has the O(K) fold beating the O(K log K) sort-of-structs.
+    # A long zero keeps integer lattices exact (64 dims x diff^2 <=
+    # 2^42, well under 2^63).
+    integral = _integral(pts)
+    cb = cent.agg(F.collect_list(F.struct(*keys, "cid", "cv")).alias("cb"))
+    own = (
+        F.filter("cb", lambda c: reduce(operator.and_, [c[k] == F.col(k) for k in keys]))
+        if keys
+        else F.col("cb")
+    )
     scored = F.transform(
-        F.col("cb"),
+        own,
         lambda c: F.struct(
-            sq_dist(F.col("v"), c.getField("cv")).alias("d"),
-            c.getField("centroid_id").alias("centroid_id"),
+            sq_dist("v", c["cv"], F.lit(0).cast("long") if integral else None).alias("d"),
+            c["cid"].alias("cid"),
         ),
     )
     best = F.aggregate(
         scored,
-        F.lit(None).cast("struct<d:double,centroid_id:bigint>"),
+        F.lit(None).cast(f"struct<d:{'bigint' if integral else 'double'},cid:bigint>"),
         lambda acc, s: F.when(
             acc.isNull()
-            | (s.getField("d") < acc.getField("d"))
-            | (
-                (s.getField("d") == acc.getField("d"))
-                & (s.getField("centroid_id") < acc.getField("centroid_id"))
-            ),
+            | (s["d"] < acc["d"])
+            | ((s["d"] == acc["d"]) & (s["cid"] < acc["cid"])),
             s,
         ).otherwise(acc),
     )
     return (
         pts.crossJoin(F.broadcast(cb))
-        # Empty-codebook guard: matches the old crossJoin against a
-        # 0-row centroid frame, which emitted no rows. Checked on the
-        # broadcast array, so no argmin work runs for the empty case.
-        .where(F.size("cb") > 0)
+        # Empty-group guard, checked on the broadcast array before any
+        # distance work (matches the old inner join's drop).
+        .where(F.size(own) > 0)
         .withColumn("b", best)
-        .select(
-            "vec_id",
-            "v",
-            F.col("b.centroid_id").alias("centroid_id"),
-            F.col("b.d").alias("d"),
-        )
+        .select("vec_id", *keys, "v", F.col("b.cid").alias("cid"), F.col("b.d").alias("d"))
     )
 
 
-def _recompute_centroids(assigned: DataFrame) -> DataFrame:
-    """Mean vector per cluster, dimension-wise, reassembled in order."""
+def centroid_means(assigned: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """Mean vector per (*keys, cid), dimension-wise, reassembled in
+    order: (*keys, cid, cv). Integral vectors take the floor mean
+    div(sum, count) — the mean snapped back onto the lattice."""
+    # posexplode + partial sums: the dim-fold row blowup is collapsed
+    # map-side by the hash aggregation (K*dim rows reach the
+    # exchange, not n*dim). A round-13 experiment replaced this with
+    # 2*dim per-index aggregate columns keyed by cid alone (one K-row
+    # exchange instead of two) — measured SLOWER at sf0.1/dim=64
+    # (+2.3 s per query: 128 wide aggregation buffers defeat codegen),
+    # so the exploded shape stays; docs/SCALE.md r13.
+    if _integral(assigned):
+        mean = F.call_function("div", F.sum("x"), F.count(F.lit(1)))
+    else:
+        mean = F.avg("x")
     return (
-        assigned.select("centroid_id", F.posexplode("v").alias("pos", "x"))
-        .groupBy("centroid_id", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("centroid_id")
+        assigned.select(*keys, "cid", F.posexplode("v").alias("pos", "x"))
+        .groupBy(*keys, "cid", "pos")
+        .agg(mean.alias("m"))
+        .groupBy(*keys, "cid")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
@@ -112,24 +158,32 @@ def _recompute_centroids(assigned: DataFrame) -> DataFrame:
     )
 
 
+def lloyd(
+    pts: DataFrame, cent: DataFrame, n_iters: int, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """``n_iters`` Lloyd rounds from codebook ``cent``; returns the
+    final codebook (*keys, cid, cv)."""
+    # LAZY checkpoints (round 14): an eager localCheckpoint is its own
+    # blocking Spark job per round. eager=False keeps the same
+    # materialize-once/lineage-cut semantics but folds each
+    # materialization into the FIRST job that consumes it (the next
+    # round's collected-codebook broadcast build). Every round still
+    # reads the previous round's materialized blocks, never its
+    # lineage.
+    for _ in range(n_iters):
+        cent = centroid_means(nearest_centroid(pts, cent, keys), keys).localCheckpoint(
+            eager=False
+        )
+    return cent
+
+
 def kmeans(
     pts: DataFrame, k: int = K_CLUSTERS, n_iters: int = N_ITERS
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd's algorithm; returns (centroids, final assignment).
-
-    Init is deterministic (seed centroids = points with vec_id < k)
-    so every run — and the recall test against the exact baseline —
-    sees the same fixpoint. Production init would be k-means|| over a
-    sample; the rounds are identical.
-    """
-    cent = pts.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    assigned = None
-    for _ in range(n_iters):
-        assigned = assign_nearest(pts, cent)
-        cent = _recompute_centroids(assigned).localCheckpoint()
-    return cent, assign_nearest(pts, cent)
+    """Lloyd's algorithm from ``_seeds``; returns (centroids, final
+    assignment). ``n_iters=0`` is the pinned init."""
+    cent = lloyd(pts, _seeds(pts, k), n_iters)
+    return cent, nearest_centroid(pts, cent)
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,6 +193,33 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _in_cell_topk(assigned: DataFrame) -> DataFrame:
+    """Each probe query's TOP_K cosine neighbours inside its own cell
+    (IVF with nprobe=1): (query_id, neighbor_id, rank, cosine)."""
+    base = assigned.select("vec_id", "v", "cid").withColumn(
+        "norm", norm_sq("v")
+    ).localCheckpoint()  # assign once; both join sides below reuse it
+    q = base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("norm").alias("qnorm"),
+        "cid",
+    )
+    c = base.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("v").alias("cv"),
+        F.col("norm").alias("cnorm"),
+        "cid",
+    )
+    scored = (
+        F.broadcast(q)
+        .join(c, "cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
+    )
+    return top_k(scored, TOP_K)
+
+
 @query("kmeans_clusters")
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster census after N_ITERS Lloyd rounds: size and inertia
@@ -146,14 +227,10 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented non-SQL-expressible case); semantics pinned by
     tests/test_clustering.py."""
     _, assigned = kmeans(_points(spark, sf_dir))
-    return (
-        assigned.groupBy("centroid_id")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.round(F.sum("d"), 2).alias("inertia"),
-        )
-        .select("centroid_id", "n_members", "inertia")
-    )
+    return assigned.groupBy("cid").agg(
+        F.count("*").alias("n_members"),
+        F.round(F.sum("d"), 2).alias("inertia"),
+    ).select(F.col("cid").alias("centroid_id"), "n_members", "inertia")
 
 
 @query("ann_ivf_trained")
@@ -170,30 +247,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     beat random partitioning's recall; on real clustered embeddings
     it does, and the mechanics verified here are identical.)
     """
-    pts = _points(spark, sf_dir)
-    _, assigned = kmeans(pts)
-    base = assigned.select("vec_id", "v", "centroid_id").withColumn(
-        "norm", norm_sq("v")
-    ).localCheckpoint()  # train once; both join sides below reuse it
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        "centroid_id",
-    )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-        "centroid_id",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
-    )
-    return top_k(scored, TOP_K)
+    return _in_cell_topk(kmeans(_points(spark, sf_dir))[1])
 
 
 # --- exact-integer lattice Lloyd (fully oracled iterative k-means) ----------
@@ -216,9 +270,9 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round — semantically irrelevant, and the price of an exact gate on
 # an iterative algorithm.
 #
-# Scale shape per round is identical to the float lane: broadcast-K
-# assignment (corpus never shuffles), posexplode + partial-agg
-# update carrying K*d partial sums.
+# The rounds are the float lane's own ``lloyd``: the integral
+# element type alone switches the distance accumulator to int64 and the
+# update to the floor mean.
 
 LATTICE_SCALE = 1 << 20
 LATTICE_SHIFT = 1 << 21
@@ -232,73 +286,7 @@ def _lattice_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             lambda x: F.floor(x.cast("double") * LATTICE_SCALE).cast("long")
             + F.lit(LATTICE_SHIFT).cast("long"),
-        ).alias("q"),
-    )
-
-
-def _lattice_dist(qc: str | Column, mc: str | Column) -> Column:
-    return sq_dist(qc, mc, zero=F.lit(0).cast("long"))
-
-
-def _lattice_assign(pts: DataFrame, cent: DataFrame) -> DataFrame:
-    # Collected-codebook argmin (see assign_nearest): exact-integer
-    # (asc d, asc cid) running-min fold over the K scored structs,
-    # zero exchanges — the round-12 min(struct) groupBy shape paid a
-    # full-corpus Sort + SortAggregate + Exchange per round.
-    cb = cent.agg(F.collect_list(F.struct("cid", "m")).alias("cb"))
-    scored = F.transform(
-        F.col("cb"),
-        lambda c: F.struct(
-            _lattice_dist(F.col("q"), c.getField("m")).alias("d"),
-            c.getField("cid").alias("cid"),
-        ),
-    )
-    best = F.aggregate(
-        scored,
-        F.lit(None).cast("struct<d:bigint,cid:bigint>"),
-        lambda acc, s: F.when(
-            acc.isNull()
-            | (s.getField("d") < acc.getField("d"))
-            | (
-                (s.getField("d") == acc.getField("d"))
-                & (s.getField("cid") < acc.getField("cid"))
-            ),
-            s,
-        ).otherwise(acc),
-    )
-    return (
-        pts.crossJoin(F.broadcast(cb))
-        # empty-codebook guard (matches the old 0-row crossJoin)
-        .where(F.size("cb") > 0)
-        .withColumn("b", best)
-        .select(
-            "vec_id", "q", F.col("b.cid").alias("cid"), F.col("b.d").alias("d")
-        )
-    )
-
-
-def _lattice_update(assigned: DataFrame) -> DataFrame:
-    # posexplode + (cid, pos) partial sums: the dim-fold row blowup is
-    # collapsed map-side by the hash aggregation (K*dim rows reach the
-    # exchange, not n*dim). A round-13 experiment replaced this with
-    # 2*dim per-index aggregate columns keyed by cid alone (one K-row
-    # exchange instead of two) — measured SLOWER at sf0.1/dim=64
-    # (+2.3 s per query: 128 wide aggregation buffers defeat codegen),
-    # so the exploded shape stays; docs/SCALE.md r13.
-    return (
-        assigned.select("cid", F.posexplode("q").alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            "cid", "pos", F.call_function("div", F.col("s"), F.col("c")).alias("mv")
-        )
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda s: s["mv"],
-            ).alias("m")
-        )
+        ).alias("v"),
     )
 
 
@@ -378,13 +366,7 @@ def q_kmeans_lattice_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free integer, so the whole fixpoint sits behind the
     rows+schema+hash gate (unlike the float lane, whose avg() makes
     that impossible by construction)."""
-    pts = _lattice_points(spark, sf_dir)
-    cent = pts.filter(F.col("vec_id") < K_CLUSTERS).select(
-        F.col("vec_id").alias("cid"), F.col("q").alias("m")
-    )
-    for _ in range(N_ITERS):
-        cent = _lattice_update(_lattice_assign(pts, cent)).localCheckpoint()
-    final = _lattice_assign(pts, cent)
+    _, final = kmeans(_lattice_points(spark, sf_dir))
     return final.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("d").alias("inertia_q"),
@@ -402,83 +384,21 @@ PQ_CANDIDATES = 64  # ADC shortlist size fed to the exact re-rank
 
 
 def _subvectors(pts: DataFrame, dim: int) -> DataFrame:
-    """(vec_id, v) → (vec_id, sub, sv): the m disjoint slices."""
+    """(vec_id, v) → (vec_id, sub, v): the m disjoint slices."""
     width = dim // PQ_M
     slices = F.array(
         *[F.slice("v", s * width + 1, width) for s in range(PQ_M)]
     )
-    return pts.select("vec_id", F.posexplode(slices).alias("sub", "sv"))
-
-
-def pq_assign(subvecs: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest codebook entry per (vector, subspace) — shared by every
-    training round AND the final encode, so a tie-break or distance
-    change can never diverge between them. Returns
-    (vec_id, sub, cid, sv)."""
-    # Collected-codebook argmin (see assign_nearest / _pq_lattice_
-    # assign): the whole (sub, cid, cv) codebook collapses to one
-    # broadcast row; each row filters its own subspace's entries and
-    # running-min folds over them — zero exchanges, same (asc d, asc
-    # cid) tie-break as the round-12 min(struct) groupBy, which paid a
-    # Sort + SortAggregate + Exchange(vec_id, sub) of the subvector
-    # frame per call.
-    cb = cent.agg(F.collect_list(F.struct("sub", "cid", "cv")).alias("cb"))
-    scored = F.transform(
-        F.filter(F.col("cb"), lambda c: c.getField("sub") == F.col("sub")),
-        lambda c: F.struct(
-            sq_dist(F.col("sv"), c.getField("cv")).alias("d"),
-            c.getField("cid").alias("cid"),
-        ),
-    )
-    best = F.aggregate(
-        scored,
-        F.lit(None).cast("struct<d:double,cid:bigint>"),
-        lambda acc, s: F.when(
-            acc.isNull()
-            | (s.getField("d") < acc.getField("d"))
-            | (
-                (s.getField("d") == acc.getField("d"))
-                & (s.getField("cid") < acc.getField("cid"))
-            ),
-            s,
-        ).otherwise(acc),
-    )
-    return (
-        subvecs.crossJoin(F.broadcast(cb))
-        # empty-subspace guard (matches the old inner join's drop)
-        .where(
-            F.exists(F.col("cb"), lambda c: c.getField("sub") == F.col("sub"))
-        )
-        .withColumn("b", best)
-        .select("vec_id", "sub", F.col("b.cid").alias("cid"), "sv")
-    )
+    return pts.select("vec_id", F.posexplode(slices).alias("sub", "v"))
 
 
 def pq_train(subvecs: DataFrame, n_iters: int = PQ_ITERS) -> DataFrame:
     """Per-subspace k-means codebooks, all m trained in ONE joint
-    Lloyd loop keyed by (sub, cid) — each iteration is a single
-    broadcast join + argmin + one grouped average over every subspace
-    at once (m separate driver loops would m-fold the pass count).
+    Lloyd loop keyed by ``sub`` — each iteration is a single
+    broadcast argmin + one grouped average over every subspace at
+    once (m separate driver loops would m-fold the pass count).
     Returns (sub, cid, cv)."""
-    cent = subvecs.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
-    )
-    for _ in range(n_iters):
-        assigned = pq_assign(subvecs, cent)
-        cent = (
-            assigned.select("sub", "cid", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("sub", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .localCheckpoint()
-        )
-    return cent
+    return lloyd(subvecs, _seeds(subvecs, PQ_K, ("sub",)), n_iters, ("sub",))
 
 
 @query("ann_pq_adc")
@@ -517,8 +437,12 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = pq_train(subvecs)
 
     # Encode: argmin codebook entry per (vector, subspace) — the same
-    # pq_assign used during training.
-    codes = pq_assign(subvecs, cent).select("vec_id", "sub", "cid").localCheckpoint()
+    # nearest_centroid every training round runs.
+    codes = (
+        nearest_centroid(subvecs, cent, ("sub",))
+        .select("vec_id", "sub", "cid")
+        .localCheckpoint()
+    )
 
     norms = pts.withColumn("norm", norm_sq("v"))
     queries = norms.filter(F.col("vec_id") < N_QUERIES).select(
@@ -530,7 +454,7 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebook entry; |Q| x m x k rows, broadcast.
     qsub = _subvectors(
         queries.select(F.col("query_id").alias("vec_id"), F.col("qv").alias("v")), dim
-    ).select(F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv"))
+    ).select(F.col("vec_id").alias("query_id"), "sub", F.col("v").alias("qsv"))
     adc = qsub.join(F.broadcast(cent), "sub").select(
         "query_id",
         "sub",
@@ -641,33 +565,7 @@ def q_ann_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (nprobe=1, top-TOP_K cosine per probe query) against
     the 0-iteration pinned-init codebook — the fully-oracled twin of
     ``ann_ivf_trained`` (see section comment)."""
-    pts = _points(spark, sf_dir)
-    cent = pts.filter(F.col("vec_id") < K_CLUSTERS).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    assigned = assign_nearest(pts, cent)
-    base = assigned.select("vec_id", "v", "centroid_id").withColumn(
-        "norm", norm_sq("v")
-    ).localCheckpoint()  # assign once; both join sides below reuse it
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        "centroid_id",
-    )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-        "centroid_id",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_raw", cosine("qv", "cv", "qnorm", "cnorm"))
-    )
-    return top_k(scored, TOP_K)
+    return _in_cell_topk(kmeans(_points(spark, sf_dir), n_iters=0)[1])
 
 
 # --- lattice PQ census (fully oracled per-subspace Lloyd) -------------------
@@ -677,10 +575,11 @@ def q_ann_ivf_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic on the same 2^-20 lattice, so the product-quantization
 # trainer — the float version of which is the rows-only ann_pq_adc
 # class — carries a full rows+schema+hash DuckDB gate. Rounds are
-# keyed by (sub, cid); assignment is the broadcast argmin
-# (hash-join on sub + partial min(struct)); the update is the
-# element-wise integer floor-mean. The DuckDB twin unrolls the
-# rounds exactly like the lattice-Lloyd/BPE/Markov oracles.
+# ``pq_train`` itself on integral subvectors: ``lloyd`` keyed by
+# ``sub``, whose broadcast argmin running-min folds over each row's own
+# subspace entries and whose update is the element-wise integer
+# floor-mean. The DuckDB twin unrolls the rounds exactly like the
+# lattice-Lloyd/BPE/Markov oracles.
 
 
 def _pq_lattice_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -689,76 +588,11 @@ def _pq_lattice_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # greatest(1, max(len(q)) // PQ_M): an arbitrary first() row is
     # partition-order dependent and diverges from the oracle if
     # embedding dimensionality is ever non-uniform (ADVICE r12).
-    dmax = pts.agg(F.max(F.size("q")).alias("d")).first()["d"]
+    dmax = pts.agg(F.max(F.size("v")).alias("d")).first()["d"]
     dim = int(dmax) if dmax is not None else PQ_M
     width = max(1, dim // PQ_M)
-    slices = F.array(*[F.slice("q", s * width + 1, width) for s in range(PQ_M)])
-    return pts.select("vec_id", F.posexplode(slices).alias("sub", "sq"))
-
-
-def _pq_lattice_assign(subv: DataFrame, cent: DataFrame) -> DataFrame:
-    # Collected-codebook argmin, per-subspace: the whole (sub, cid, m)
-    # codebook collapses to one broadcast row; each row filters its
-    # own subspace's entries out of the array and running-min folds
-    # over them — zero exchanges, where the round-12 broadcast join +
-    # min(struct) groupBy still paid a Sort + SortAggregate +
-    # Exchange(vec_id, sub) of the full subvector frame per round.
-    cb = cent.agg(F.collect_list(F.struct("sub", "cid", "m")).alias("cb"))
-    scored = F.transform(
-        F.filter(F.col("cb"), lambda c: c.getField("sub") == F.col("sub")),
-        lambda c: F.struct(
-            _lattice_dist(F.col("sq"), c.getField("m")).alias("d"),
-            c.getField("cid").alias("cid"),
-        ),
-    )
-    best = F.aggregate(
-        scored,
-        F.lit(None).cast("struct<d:bigint,cid:bigint>"),
-        lambda acc, s: F.when(
-            acc.isNull()
-            | (s.getField("d") < acc.getField("d"))
-            | (
-                (s.getField("d") == acc.getField("d"))
-                & (s.getField("cid") < acc.getField("cid"))
-            ),
-            s,
-        ).otherwise(acc),
-    )
-    return (
-        subv.crossJoin(F.broadcast(cb))
-        # empty-subspace guard (matches the old inner join's drop):
-        # checked on the broadcast array before any distance work
-        .where(
-            F.exists(F.col("cb"), lambda c: c.getField("sub") == F.col("sub"))
-        )
-        .withColumn("b", best)
-        .select(
-            "vec_id", "sub", "sq",
-            F.col("b.cid").alias("cid"),
-            F.col("b.d").alias("d"),
-        )
-    )
-
-
-def _pq_lattice_update(assigned: DataFrame) -> DataFrame:
-    # posexplode + (sub, cid, pos) partial sums — see _lattice_update
-    # for why the exploded shape beats per-index aggregate columns.
-    return (
-        assigned.select("sub", "cid", F.posexplode("sq").alias("pos", "x"))
-        .groupBy("sub", "cid", "pos")
-        .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            "sub", "cid", "pos",
-            F.call_function("div", F.col("s"), F.col("c")).alias("mv"),
-        )
-        .groupBy("sub", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                lambda s: s["mv"],
-            ).alias("m")
-        )
-    )
+    slices = F.array(*[F.slice("v", s * width + 1, width) for s in range(PQ_M)])
+    return pts.select("vec_id", F.posexplode(slices).alias("sub", "v"))
 
 
 def _pq_lattice_round_sql(r: int) -> str:
@@ -847,12 +681,7 @@ def q_pq_lattice_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensionality, the same bounded-metadata class as the IVF
     builders."""
     subv = _pq_lattice_frames(spark, sf_dir)
-    cent = subv.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("sq").alias("m")
-    )
-    for _ in range(PQ_ITERS):
-        cent = _pq_lattice_update(_pq_lattice_assign(subv, cent)).localCheckpoint()
-    final = _pq_lattice_assign(subv, cent)
+    final = nearest_centroid(subv, pq_train(subv), ("sub",))
     return final.groupBy("sub", "cid").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("d").alias("inertia_q"),

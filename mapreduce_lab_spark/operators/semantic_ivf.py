@@ -23,8 +23,8 @@ Index construction — an inverted multi-index (Babenko & Lempitsky,
    vector, the same bound the dedup lane's members arrays carry.
 2. **Train two half-space codebooks** of K1 = ceil(sqrt(n / C))
    centroids each (C = IMI_TARGET_CELL) with a joint sampled Lloyd
-   loop — the per-subspace (sub, cid)-keyed trainer shape shared
-   with ``operators/clustering.py`` ``pq_train``/``pq_assign``.
+   loop — ``operators/clustering.py`` ``lloyd`` keyed by ``sub``, the
+   same rounds ``pq_train`` runs.
    Training touches a deterministic ~IMI_TRAIN_PER_CENT·K1-row
    sample, so the train cost is O(n) no matter the corpus.
 3. **Assign every rep to product cells** (cid1, cid2) via ONE 1-row
@@ -87,7 +87,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_lab_spark.functions.numeric import to_units
 from mapreduce_lab_spark.functions.vectors import exact_pairs, sq_dist
-from mapreduce_lab_spark.operators.clustering import pq_assign
+from mapreduce_lab_spark.operators.clustering import lloyd
 from mapreduce_lab_spark.operators.dedup import (
     _O_DOT,
     _O_NORM,
@@ -142,10 +142,10 @@ def collapse_identical_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _half_subvectors(pts: DataFrame, dim: int) -> DataFrame:
-    """(vec_id, v) → (vec_id, sub, sv): the two half-space slices."""
+    """(vec_id, v) → (vec_id, sub, v): the two half-space slices."""
     w1 = dim // 2
     slices = F.array(F.slice("v", 1, w1), F.slice("v", w1 + 1, dim - w1))
-    return pts.select("vec_id", F.posexplode(slices).alias("sub", "sv"))
+    return pts.select("vec_id", F.posexplode(slices).alias("sub", "v"))
 
 
 def _train_sample(reps: DataFrame, n: int, k1: int) -> DataFrame:
@@ -167,50 +167,26 @@ def init_codebooks(sv: DataFrame, k1: int) -> DataFrame:
     """
     w = Window.partitionBy("sub").orderBy("vec_id")
     return (
-        sv.groupBy("sub", "sv")
+        sv.groupBy("sub", "v")
         .agg(F.min("vec_id").alias("vec_id"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k1)
-        .select("sub", F.col("vec_id").alias("cid"), F.col("sv").alias("cv"))
+        .select("sub", F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
 
 
 def train_codebooks(reps: DataFrame, n: int, k1: int, dim: int) -> DataFrame:
-    """Joint sampled Lloyd training of both half-space codebooks.
-
-    Returns (sub, cid, cv). Init is ``init_codebooks`` (deterministic
-    distinct-first selection). Each round is one broadcast argmin
-    (``pq_assign``) + one grouped dimension-wise average over the
-    sample — identical round shape to ``clustering.pq_train``,
-    parameterized by k1 and the sample.
+    """Joint sampled Lloyd training of both half-space codebooks:
+    ``clustering.lloyd`` keyed by ``sub`` over the training sample,
+    from ``init_codebooks`` (deterministic distinct-first selection).
+    Returns (sub, cid, cv).
     """
-    # LAZY checkpoints (round 14): each eager localCheckpoint was its
-    # own blocking Spark job, so training a ~32·K1-row sample cost 4+
-    # scheduled jobs of almost pure fixed overhead. eager=False keeps
-    # the same materialize-once/lineage-cut semantics but folds each
-    # materialization into the FIRST job that consumes it (the next
-    # round's collected-codebook broadcast build), halving the lane's
-    # job count. Cross-round subtree re-execution stays impossible:
-    # every round still reads the previous round's materialized
-    # blocks, never its lineage.
+    # Lazy checkpoints (round 14), as every lloyd round: each
+    # materialization rides the first job that consumes it instead of
+    # costing its own blocking job.
     sv = _half_subvectors(_train_sample(reps, n, k1), dim).localCheckpoint(eager=False)
-    cent = init_codebooks(sv, k1).localCheckpoint(eager=False)
-    for _ in range(IMI_TRAIN_ITERS):
-        assigned = pq_assign(sv, cent)
-        cent = (
-            assigned.select("sub", "cid", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("sub", "cid", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("sub", "cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cv")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return cent
+    init = init_codebooks(sv, k1).localCheckpoint(eager=False)
+    return lloyd(sv, init, IMI_TRAIN_ITERS, ("sub",))
 
 
 def build_ivf_index(
@@ -257,9 +233,9 @@ def ivf_postings(
     (~9 MB of structs even at n = 10^10). Per-row work is two
     array_sort-of-distances over the codebook array plus a sort of
     the IMI_PROBE_RANK² combined cells; NO shuffle of the n·K1
-    expansion ever exists (the window-over-crossJoin form
-    ``clustering.assign_nearest`` uses for K=8 would shuffle n·K1
-    64-double rows here).
+    expansion ever exists. It is ``clustering.nearest_centroid``'s
+    broadcast with a top-IMI_PROBE_RANK sort in place of its
+    running-min fold, because probing needs more than the argmin.
     """
     if nprobe is None:
         nprobe = IVF_NPROBE
@@ -275,7 +251,7 @@ def ivf_postings(
             ),
         )
         # array_sort on (d, cid) structs = argmin with ties to the
-        # smaller centroid id — the same tie rule as pq_assign.
+        # smaller centroid id — the same tie rule as nearest_centroid.
         return F.slice(F.array_sort(ds), 1, IMI_PROBE_RANK)
 
     t1 = tops(F.slice("v", 1, w1), 0)

@@ -13,6 +13,51 @@ from mapreduce_lab_spark.operators.similarity import knn_bruteforce
 from mapreduce_lab_spark.sources.tables import load_table
 
 
+def test_round_ties_to_the_smaller_cid(spark):
+    # Centroids at equal distance from the point: the smaller cid wins,
+    # whichever order the codebook lists them in, in both lanes.
+    for t, x in (("double", float), ("bigint", int)):
+        pts = spark.createDataFrame([(0, [x(0), x(0)])], f"vec_id bigint, v array<{t}>")
+        cent = spark.createDataFrame(
+            [(7, [x(1), x(0)]), (3, [x(0), x(1)]), (5, [x(-1), x(0)])],
+            f"cid bigint, cv array<{t}>",
+        )
+        (r,) = clustering.nearest_centroid(pts, cent).collect()
+        assert (r.cid, r.d) == (3, 1), (t, r)
+
+
+def test_round_integer_distance_is_exact(spark):
+    # 2**54 + 1 has no double: a double accumulator would round it to
+    # 2**54. The integral lane folds from a long zero.
+    pts = spark.createDataFrame([(0, [0, 0])], "vec_id bigint, v array<bigint>")
+    cent = spark.createDataFrame([(0, [2**27, 1])], "cid bigint, cv array<bigint>")
+    (r,) = clustering.nearest_centroid(pts, cent).collect()
+    assert r.d == 2**54 + 1
+
+
+def test_round_drops_points_without_centroids(spark):
+    # A keyed point whose sub has no centroid, and any point against an
+    # empty codebook, give no row.
+    pts = spark.createDataFrame(
+        [(0, 0, [0.0]), (0, 1, [0.0])], "vec_id bigint, sub int, v array<double>"
+    )
+    cent = spark.createDataFrame([(0, 4, [1.0])], "sub int, cid bigint, cv array<double>")
+    got = clustering.nearest_centroid(pts, cent, ("sub",)).collect()
+    assert [(r.sub, r.cid) for r in got] == [(0, 4)]
+    empty = spark.createDataFrame([], "cid bigint, cv array<double>")
+    assert clustering.nearest_centroid(pts.drop("sub"), empty).collect() == []
+
+
+def test_round_mean_follows_the_element_type(spark):
+    # The lattice keeps its floor mean; the float lane averages.
+    for t, x, want in (("bigint", int, [1]), ("double", float, [1.5])):
+        assigned = spark.createDataFrame(
+            [(0, [x(1)], 0), (1, [x(2)], 0)], f"vec_id bigint, v array<{t}>, cid bigint"
+        )
+        (r,) = clustering.centroid_means(assigned).collect()
+        assert (r.cid, r.cv) == (0, want), (t, r)
+
+
 def _inertia(assigned) -> float:
     return assigned.agg(F.sum("d")).collect()[0][0]
 
@@ -23,17 +68,15 @@ def test_lloyd_inertia_monotone_decreasing(spark, sf_dir):
     # catch a mis-assembled centroid array (wrong dimension order
     # scrambles means and sends inertia up).
     pts = clustering._points(spark, sf_dir)
-    cent = pts.filter(F.col("vec_id") < clustering.K_CLUSTERS).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
+    cent = clustering._seeds(pts, clustering.K_CLUSTERS)
     prev = None
     for _ in range(3):
-        assigned = clustering.assign_nearest(pts, cent)
+        assigned = clustering.nearest_centroid(pts, cent)
         cur = _inertia(assigned)
         if prev is not None:
             assert cur <= prev * (1 + 1e-9), (cur, prev)
         prev = cur
-        cent = clustering._recompute_centroids(assigned).localCheckpoint()
+        cent = clustering.centroid_means(assigned).localCheckpoint()
 
 
 def test_kmeans_fixpoint_assignment(spark, sf_dir):
@@ -42,9 +85,9 @@ def test_kmeans_fixpoint_assignment(spark, sf_dir):
     # identical partition of the corpus.
     pts = clustering._points(spark, sf_dir)
     cent, assigned = clustering.kmeans(pts)
-    again = clustering.assign_nearest(pts, cent)
-    a = {r.vec_id: r.centroid_id for r in assigned.collect()}
-    b = {r.vec_id: r.centroid_id for r in again.collect()}
+    again = clustering.nearest_centroid(pts, cent)
+    a = {r.vec_id: r.cid for r in assigned.collect()}
+    b = {r.vec_id: r.cid for r in again.collect()}
     assert a == b
 
 
@@ -110,7 +153,9 @@ def test_pq_adc_recall_and_code_shape(spark, sf_dir):
     assert all(c < clustering.PQ_K for c in by_sub.values())
     # The CODES themselves: every vector carries exactly m codes
     # (one per subspace, none dropped by the argmin), all < k.
-    codes = clustering.pq_assign(subvecs, cent).select("vec_id", "sub", "cid")
+    codes = clustering.nearest_centroid(subvecs, cent, ("sub",)).select(
+        "vec_id", "sub", "cid"
+    )
     per_vec = codes.groupBy("vec_id").agg(
         F.count("*").alias("n"),
         F.count_distinct("sub").alias("n_subs"),
@@ -158,21 +203,20 @@ def test_lattice_inertia_monotone_decreasing(spark, sf_dir):
     from mapreduce_lab_spark.operators.clustering import (
         K_CLUSTERS,
         N_ITERS,
-        _lattice_assign,
         _lattice_points,
-        _lattice_update,
+        _seeds,
+        centroid_means,
+        nearest_centroid,
     )
     from pyspark.sql import functions as F
 
     pts = _lattice_points(spark, sf_dir).localCheckpoint()
-    cent = pts.filter(F.col("vec_id") < K_CLUSTERS).select(
-        F.col("vec_id").alias("cid"), F.col("q").alias("m")
-    )
+    cent = _seeds(pts, K_CLUSTERS)
     inertias = []
     for _ in range(N_ITERS):
-        assigned = _lattice_assign(pts, cent)
+        assigned = nearest_centroid(pts, cent)
         inertias.append(assigned.agg(F.sum("d")).collect()[0][0])
-        cent = _lattice_update(assigned).localCheckpoint()
+        cent = centroid_means(assigned).localCheckpoint()
     assert all(b <= a for a, b in zip(inertias, inertias[1:])), inertias
 
 
@@ -187,9 +231,10 @@ def test_pq_lattice_tracks_float_pq_and_descends(spark, sf_dir):
         PQ_ITERS,
         PQ_K,
         PQ_M,
-        _pq_lattice_assign,
         _pq_lattice_frames,
-        _pq_lattice_update,
+        _seeds,
+        centroid_means,
+        nearest_centroid,
         q_pq_lattice_census,
     )
 
@@ -203,12 +248,10 @@ def test_pq_lattice_tracks_float_pq_and_descends(spark, sf_dir):
     assert all(v == n_vecs for v in per_sub.values()), per_sub
 
     subv = _pq_lattice_frames(spark, sf_dir).localCheckpoint()
-    cent = subv.filter(F.col("vec_id") < PQ_K).select(
-        "sub", F.col("vec_id").alias("cid"), F.col("sq").alias("m")
-    )
+    cent = _seeds(subv, PQ_K, ("sub",))
     inertias = []
     for _ in range(PQ_ITERS):
-        assigned = _pq_lattice_assign(subv, cent)
+        assigned = nearest_centroid(subv, cent, ("sub",))
         inertias.append(assigned.agg(F.sum("d")).collect()[0][0])
-        cent = _pq_lattice_update(assigned).localCheckpoint()
+        cent = centroid_means(assigned, ("sub",)).localCheckpoint()
     assert all(b <= a for a, b in zip(inertias, inertias[1:])), inertias

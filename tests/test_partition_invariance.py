@@ -41,6 +41,11 @@ CASES = [
     "markov_removal_attribution",
     "grouped_exact_median",
     "t_closeness_census",
+    # The exact Lloyd lanes: every round is order-independent integer
+    # arithmetic because the integral element type picks the int64
+    # distance and the floor-mean update in clustering.lloyd.
+    "kmeans_lattice_census",
+    "pq_lattice_census",
 ]
 
 

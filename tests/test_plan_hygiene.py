@@ -545,3 +545,48 @@ def test_matmul_audit_list_not_stale():
     seen = {(rel, src) for rel, _, src in _matmuls()}
     stale = [k for k in MATMUL_AUDITED if k not in seen]
     assert stale == [], f"MATMUL_AUDITED entries no longer needed: {stale}"
+
+
+# One argmin fold: the running-min ``F.aggregate`` (a merge lambda that
+# tests its accumulator with ``acc.isNull()``) lives only in
+# clustering.nearest_centroid; every k-means trainer calls it.
+class _ArgminFolds(ast.NodeVisitor):
+    def __init__(self, rel: str) -> None:
+        self.rel, self.fns, self.hits = rel, [], []
+
+    def visit_FunctionDef(self, node: ast.FunctionDef) -> None:
+        self.fns.append(node.name)
+        self.generic_visit(node)
+        self.fns.pop()
+
+    def visit_Call(self, node: ast.Call) -> None:
+        merge = node.args[2] if len(node.args) > 2 else next(
+            (k.value for k in node.keywords if k.arg == "merge"), None
+        )
+        if (
+            isinstance(node.func, ast.Attribute)
+            and node.func.attr == "aggregate"
+            and isinstance(merge, ast.Lambda)
+            and merge.args.args
+            and any(
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "isNull"
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id == merge.args.args[0].arg
+                for n in ast.walk(merge.body)
+            )
+        ):
+            self.hits.append((self.rel, ".".join(self.fns), node.lineno))
+        self.generic_visit(node)
+
+
+def test_one_argmin_fold():
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        v = _ArgminFolds(path.relative_to(PKG).as_posix())
+        v.visit(ast.parse(path.read_text()))
+        hits += v.hits
+    assert [(rel, fn) for rel, fn, _ in hits] == [
+        ("operators/clustering.py", "nearest_centroid")
+    ], f"running-min argmin folds outside clustering.nearest_centroid: {hits}"
